@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * One driver program, one SparkSession; stage boundaries are DataFrame
   * hand-offs instead of the reference's per-stage OS processes + SQLite
-  * files. The enriched silver frame is cached once and every report is an
-  * independent lazy DAG over it.
+  * files. The enriched silver frames are cached once ([[silver]]) and
+  * every report is an independent lazy DAG over them ([[reports]]).
   */
 object OsrsPipeline {
 
@@ -101,17 +101,21 @@ object OsrsPipeline {
       case _ => None
     }
 
-  /** Full run: raw frame (id, timestamp, raw_content) → map of gold tables.
-    * `itemPrices` feeds the as-of value override (empty frame = constants
-    * only).
+  /** The enriched silver frames every report reads, both cached. The
+    * caller owns the caches: [[Silver.unpersist]] releases them.
     */
-  def run(
-      raw: DataFrame,
-      runTime: ZonedDateTime,
-      config: Config = Config(),
-      itemPrices: Option[DataFrame] = None): Map[String, DataFrame] = {
-    val periods = Periods.compute(runTime, config.weekStartDay, config.customLookbackDays)
+  case class Silver(broadcasts: DataFrame, chat: DataFrame) {
+    def unpersist(): Unit = { broadcasts.unpersist(); chat.unpersist() }
+  }
 
+  /** Silver step: raw frame (id, timestamp, raw_content) → parsed and
+    * enriched broadcasts and chat. `itemPrices` feeds the as-of value
+    * override (empty frame = constants only).
+    */
+  def silver(
+      raw: DataFrame,
+      config: Config = Config(),
+      itemPrices: Option[DataFrame] = None): Silver = {
     val parsed = ParseEngine.parse(raw, config.parse)
 
     var broadcasts = parsed.broadcasts
@@ -125,11 +129,19 @@ object OsrsPipeline {
 
     // Every report reads these two frames — cache once, like the
     // reference's in-memory pandas frames, but spill-safe.
-    broadcasts = broadcasts.cache()
-    val chatCached = chat.cache()
+    Silver(broadcasts.cache(), chat.cache())
+  }
+
+  /** Reports step: silver → map of gold tables, each a lazy DAG over it. */
+  def reports(
+      silver: Silver,
+      runTime: ZonedDateTime,
+      config: Config = Config()): Map[String, DataFrame] = {
+    val periods = Periods.compute(runTime, config.weekStartDay, config.customLookbackDays)
+    val Silver(broadcasts, chat) = silver
 
     val leaderboardTables = config.leaderboards.map(rc =>
-      rc.reportName -> Reports.leaderboard(chatCached, broadcasts, rc, periods)).toMap
+      rc.reportName -> Reports.leaderboard(chat, broadcasts, rc, periods)).toMap
     val detailedTables = config.detailed.flatMap(rc =>
       Reports.detailed(broadcasts, rc, periods)).toMap
     val timeseriesTables = config.timeseries.map(rc =>
@@ -141,12 +153,23 @@ object OsrsPipeline {
     val recentTable = Map("recent_achievements" ->
       Reports.recentAchievements(broadcasts, config.recent))
 
-    val spark = raw.sparkSession
-    val metadata = metadataTables(spark, periods, config)
+    val metadata = metadataTables(broadcasts.sparkSession, periods, config)
 
     leaderboardTables ++ detailedTables ++ timeseriesTables ++
       clogTable ++ pbTable ++ recentTable ++ metadata
   }
+
+  /** Full run: raw frame (id, timestamp, raw_content) → map of gold tables,
+    * [[silver]] then [[reports]]. The silver caches stay alive for as long
+    * as the returned tables may be read; a long-lived caller that is done
+    * with them uses the two steps and unpersists the silver itself.
+    */
+  def run(
+      raw: DataFrame,
+      runTime: ZonedDateTime,
+      config: Config = Config(),
+      itemPrices: Option[DataFrame] = None): Map[String, DataFrame] =
+    reports(silver(raw, config, itemPrices), runTime, config)
 
   /** `run_metadata` + `dashboard_config` kv tables
     * (`3_transform_data.py:56-99`); list/dict values JSON-encoded.

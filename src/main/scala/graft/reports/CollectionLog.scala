@@ -1,21 +1,24 @@
 package graft.reports
 
-import graft.ops.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Collection-log summary (`/root/reference/src/3_transform_data.py:392-514`):
   * filter source types → item-name exclusion rules → keep-first dedup for
   * the configured type only → "72 x Onyx bolts" quantity parse → per-period
-  * quantity sums over the item universe (DB ∪ historical) → historical
-  * initial counts folded into All_Time → group structure join with
-  * ungrouped items routed to the catch-all group.
+  * quantity sums over the item universe (DB ∪ historical ∪ grouped) →
+  * historical initial counts folded into All_Time → group structure join
+  * with ungrouped items routed to the catch-all group.
   *
   * Output: Group, Item_Name, {All_Time,YTD,Prev_Month,Prev_Week,
   * Custom_Days}_Count — items repeat across groups by design.
   *
-  * Plan shape: one conditional-agg shuffle for all period counts; every
-  * join after it is against config-sized dimensions (broadcast).
+  * Plan shape: at most two shuffles and no window. The keep-first dedup is
+  * a `min(struct(Timestamp, raw_log_id))` aggregate per (Username,
+  * Item_Name). The item universe rides in the one period aggregate: the
+  * historical and grouped names are config-sized rows with a null
+  * Timestamp (so no period counts them) and their historical count. The
+  * group structure is one broadcast left join against that aggregate.
   */
 object CollectionLog {
 
@@ -50,62 +53,56 @@ object CollectionLog {
 
     // Keep-first dedup per (Username, Item_Name) for the dedup type only.
     // pandas drop_duplicates keeps first in FRAME order ≈ parse order; the
-    // deterministic window form orders by (Timestamp, raw_log_id).
+    // deterministic form orders by (Timestamp, raw_log_id). Only the kept
+    // row's Timestamp is read below, and the struct minimum puts a null
+    // Timestamp first, as the ascending sort did.
     src = clogDef.deduplicationType match {
       case Some(t) =>
-        val toDedup = src.filter(col("Broadcast_Type") === t)
-        val others = src.filter(!(col("Broadcast_Type") <=> t))
-        Dedup.keepFirst(toDedup, Seq("Username", "Item_Name"),
-          Seq(col("Timestamp").asc, col("raw_log_id").asc))
-          .unionByName(others)
+        src.filter(col("Broadcast_Type") === t)
+          .groupBy("Username", "Item_Name")
+          .agg(min(struct(col("Timestamp"), col("raw_log_id"))).as("__first"))
+          .select(col("Item_Name"), col("__first.Timestamp").as("Timestamp"))
+          .unionByName(src.filter(!(col("Broadcast_Type") <=> t))
+            .select("Item_Name", "Timestamp"))
       case None => src
     }
 
+    // Item universe = DB items ∪ historical keys ∪ grouped items. The
+    // config-side names join the period aggregate as rows that no period
+    // counts; only All_Time adds their historical count.
     val (nameCol, qtyCol) = parseQuantity(col("Item_Name"))
-    val parsed = src
+    val configNames = (hist.initialCounts.keys ++ hist.groups.flatMap(_._2)).toSeq.distinct
+    val universe = configNames
+      .map(n => (n, hist.initialCounts.getOrElse(n, 0L)))
+      .toDF("Item_Name", "__hist")
+      .select(col("Item_Name"), lit(0L).as("__qty"),
+        lit(null).cast("timestamp").as("Timestamp"), col("__hist"))
+    val rows = src
       .filter(col("Item_Name").isNotNull)
-      .select(nameCol.as("Item_Name"), qtyCol.as("__qty"), col("Timestamp"))
+      .select(nameCol.as("Item_Name"), qtyCol.as("__qty"), col("Timestamp"),
+        lit(0L).as("__hist"))
+      .unionByName(universe)
 
     // Single-pass period pivot of quantity sums.
     val aggs = periods.map { p =>
       val in = p.start
         .map(s => col("Timestamp") >= lit(s) && col("Timestamp") < lit(p.end))
         .getOrElse(col("Timestamp") < lit(p.end))
-      sum(when(in, col("__qty")).otherwise(0L)).as(s"${p.key}_Count")
+      val q = when(in, col("__qty")).otherwise(0L)
+      val name = s"${p.key}_Count"
+      sum(if (name == "All_Time_Count") q + col("__hist") else q).as(name)
     }
-    val dbCounts = parsed.groupBy("Item_Name").agg(aggs.head, aggs.tail: _*)
+    val counts = rows.groupBy("Item_Name").agg(aggs.head, aggs.tail: _*)
 
-    // Item universe = DB items ∪ historical keys, with zero-filled counts.
-    val histCounts = hist.initialCounts.toSeq.toDF("Item_Name", "__hist")
-    val universe = dbCounts.select("Item_Name")
-      .unionByName(histCounts.select("Item_Name")).distinct()
-
-    val countCols = periods.map(p => s"${p.key}_Count")
-    val counts = universe
-      .join(dbCounts, Seq("Item_Name"), "left")
-      .join(broadcast(histCounts), Seq("Item_Name"), "left")
-      .select(Seq(col("Item_Name")) ++ countCols.map {
-        case "All_Time_Count" =>
-          (coalesce(col("All_Time_Count"), lit(0L)) +
-            coalesce(col("__hist"), lit(0L))).as("All_Time_Count")
-        case c => coalesce(col(c), lit(0L)).as(c)
-      }: _*)
-
-    // Group structure (an item may belong to several groups); items with
-    // drops but no group go to the catch-all.
+    // Group structure (an item may belong to several groups); an item in no
+    // group is kept only with a positive All_Time_Count, in the catch-all.
     val grouped = hist.groups
       .flatMap { case (title, items) => items.map(i => (title, i)) }
       .toDF("Group", "Item_Name")
-    val groupedItemNames: Seq[String] = hist.groups.flatMap(_._2).distinct
-    val groupedItems = groupedItemNames.toDF("Item_Name")
-    val ungrouped = counts
-      .filter(col("All_Time_Count") > 0)
-      .join(groupedItems, Seq("Item_Name"), "left_anti")
-      .select(lit(hist.otherGroupName).as("Group"), col("Item_Name"))
-
-    grouped.unionByName(ungrouped)
-      .join(counts, Seq("Item_Name"), "left")
-      .select(Seq(col("Group"), col("Item_Name")) ++
-        countCols.map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+    counts
+      .join(broadcast(grouped), Seq("Item_Name"), "left")
+      .filter(col("Group").isNotNull || col("All_Time_Count") > 0)
+      .select(Seq(coalesce(col("Group"), lit(hist.otherGroupName)).as("Group"),
+        col("Item_Name")) ++ periods.map(p => col(s"${p.key}_Count")): _*)
   }
 }

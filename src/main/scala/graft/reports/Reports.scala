@@ -74,41 +74,54 @@ object Reports {
     * Total_Value, pandas-`resample` parity (empty buckets emitted so the
     * cumulative series is gap-free; weekly buckets are Mon–Sun labeled
     * with the SUNDAY, matching pandas 'W' = W-SUN right-labeled).
+    *
+    * Plan shape: ONE plan for every frequency. Each event is exploded into
+    * one row per frequency, tagged with that frequency's constants
+    * (`__f` = index, label, spine step, label shift) and its bucket; then
+    * one bucket aggregate, one per-frequency min/max spine, one left join
+    * and one running-sum window partitioned by `__f`. Each window
+    * partition holds one row per bucket of one frequency (time range /
+    * bucket width: ~14.6k rows for a decade of 6 h buckets), so it never
+    * grows with the event count. The index keeps a repeated frequency a
+    * series of its own, as a per-frequency union would.
     */
   def timeseries(
       broadcasts: DataFrame,
       rc: TimeseriesReportDef): DataFrame = {
-    val source = broadcasts
-      .filter(col("Broadcast_Type").isin(rc.broadcastTypes.map(lit): _*))
-      .withColumn("Item_Value", coalesce(col("Item_Value"), lit(0L)))
-
-    val perFreq = rc.frequencies.map { freq =>
+    val tags = rc.frequencies.zipWithIndex.map { case (freq, i) =>
       val (bucketCol, spineStep, labelShiftDays) = freq match {
         case "6h" | "6H" => (TimeSeries.bucket(col("Timestamp"), 21600L), 21600L, 0)
         case "D" => (TimeSeries.bucket(col("Timestamp"), 86400L), 86400L, 0)
         case "W" => (date_trunc("week", col("Timestamp")), 604800L, 6)
         case other => sys.error(s"unsupported frequency $other")
       }
-      val bucketed = source
-        .select(bucketCol.as("__bucket"), col("Username"), col("Item_Value"))
-        .groupBy("__bucket")
-        .agg(count(col("Username")).as("Count"), sum("Item_Value").as("Total_Value"))
-
-      val full = TimeSeries.spine(bucketed, "__bucket", spineStep)
-        .join(bucketed, Seq("__bucket"), "left")
-        .select(col("__bucket"),
-          coalesce(col("Count"), lit(0L)).as("Count"),
-          coalesce(col("Total_Value"), lit(0L)).as("Total_Value"))
-
-      TimeSeries.gapFreeCumulative(full, "__bucket",
-        Seq("Count" -> "Cumulative_Count", "Total_Value" -> "Cumulative_Value"))
-        .withColumn("Date", timestamp_seconds(
-          unix_timestamp(col("__bucket")) + labelShiftDays * 86400L))
-        .withColumn("Frequency", lit(freq))
-        .select("Date", "Count", "Total_Value",
-          "Cumulative_Count", "Cumulative_Value", "Frequency")
+      struct(struct(lit(i).as("i"), lit(freq).as("freq"), lit(spineStep).as("step"),
+        lit(labelShiftDays).as("shift")).as("f"), bucketCol.as("bucket"))
     }
-    perFreq.reduce(_.unionByName(_))
+    val bucketed = broadcasts
+      .filter(col("Broadcast_Type").isin(rc.broadcastTypes.map(lit): _*))
+      .select(explode(array(tags: _*)).as("__t"), col("Username"),
+        coalesce(col("Item_Value"), lit(0L)).as("Item_Value"))
+      .groupBy(col("__t.f").as("__f"), col("__t.bucket").as("__bucket"))
+      .agg(count(col("Username")).as("Count"), sum("Item_Value").as("Total_Value"))
+
+    val spine = bucketed
+      .groupBy("__f")
+      .agg(min("__bucket").as("lo"), max("__bucket").as("hi"))
+      .select(col("__f"), explode(sequence(col("lo"), col("hi"),
+        make_dt_interval(lit(0), lit(0), lit(0), col("__f.step")))).as("__bucket"))
+
+    val running = Window.partitionBy("__f").orderBy("__bucket")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val n = coalesce(col("Count"), lit(0L))
+    val total = coalesce(col("Total_Value"), lit(0L))
+    spine.join(bucketed, Seq("__f", "__bucket"), "left")
+      .select(
+        timestamp_seconds(unix_timestamp(col("__bucket")) + col("__f.shift") * 86400L).as("Date"),
+        n.as("Count"), total.as("Total_Value"),
+        sum(n).over(running).as("Cumulative_Count"),
+        sum(total).over(running).as("Cumulative_Value"),
+        col("__f.freq").as("Frequency"))
   }
 
   /** Recent achievements (`3_transform_data.py:735-763`): derived

@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   * the exactly-once ACCUMULATION: each micro-batch upserts into a
   * [[StreamingGold]]-keyed raw store (key = id, last-write-wins by
   * timestamp — a replayed batch merges to the identical table), and the
-  * rebuild runs [[OsrsPipeline.run]] over the full store — the SAME
-  * compiled parse trees and report generators as batch, so streaming and
+  * rebuild runs [[OsrsPipeline.run]]'s two steps over the full store — the
+  * SAME compiled parse trees and report generators as batch, so streaming and
   * batch outputs are identical by construction, not by parallel
   * implementation. [[GoldSink.publish]] swaps the report set atomically;
   * readers never see a half-written gold layer.
@@ -62,14 +62,19 @@ class StreamingOsrsGold(
     * slot (torn report set goes live), or finish a rebuild of OLDER
     * state last and overwrite the newer published gold until the next
     * trigger.
+    *
+    * The rebuild's silver caches are released once the publish returns,
+    * so a long-lived session holds no cached relation between batches.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit =
     rawStore.withWriteLock {
       rawStore.mergeBatch(batch, batchId)
       rawStore.read(batch.sparkSession).foreach { stored =>
-        val raw = stored.select("id", "timestamp", "raw_content")
-        val tables = OsrsPipeline.run(raw, runTime, config)
-        sink.publish(tableNames.map(n => n -> tables(n)).toMap)
+        val silver = OsrsPipeline.silver(stored.select("id", "timestamp", "raw_content"), config)
+        try {
+          val tables = OsrsPipeline.reports(silver, runTime, config)
+          sink.publish(tableNames.map(n => n -> tables(n)).toMap)
+        } finally silver.unpersist()
       }
     }
 

@@ -14,6 +14,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Physical operators of the plan Spark would run (the adaptive
+    * wrapper's initial plan, before any stage executes).
+    */
+  private def operators(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    (df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case p => p }
+
+  private def countOf[T: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame): Int =
+    operators(df).count(implicitly[scala.reflect.ClassTag[T]].runtimeClass.isInstance)
+
   test("HashedLinear: weight join broadcasts; no sort-merge anywhere") {
     import spark.implicits._
     val docs = (0L until 100L).map(i => (i, s"a b c d$i")).toDF("id", "text")
@@ -371,5 +384,39 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val plan = planOf(pairs.agg(sum(wq).as("sw"), count(lit(1)).as("n")))
     assert(plan.contains("partial_sum"), plan)
     assert(!plan.contains("Join"), plan)
+  }
+
+  test("timeseries report: one window and no union, whatever the frequency count") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val bc = (0 until 50).map(i => (new java.sql.Timestamp(i * 5000000L), "Valuable Drop",
+      s"u${i % 3}", i.toLong)).toDF("Timestamp", "Broadcast_Type", "Username", "Item_Value")
+    for (freqs <- Seq(Seq("D"), Seq("6h", "D", "W"))) {
+      val df = graft.reports.Reports.timeseries(bc,
+        graft.reports.TimeseriesReportDef("t", Seq("Valuable Drop"), freqs))
+      assert(countOf[WindowExec](df) == 1, df.queryExecution.executedPlan)
+      assert(countOf[UnionExec](df) == 0, df.queryExecution.executedPlan)
+    }
+  }
+
+  test("collection log: no window, no sort-merge join, at most two shuffles") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.reports._
+    val bc = (0 until 50).map(i => (i.toLong, new java.sql.Timestamp(i * 5000000L),
+      if (i % 2 == 0) "Collection Log" else "Valuable Drop", s"u${i % 3}", s"${i % 4} x Item_${i % 7}"))
+      .toDF("raw_log_id", "Timestamp", "Broadcast_Type", "Username", "Item_Name")
+    val df = CollectionLog.generate(bc,
+      CollectionLogDef(Seq("Collection Log", "Valuable Drop"), Some("Collection Log")),
+      ClogHistoricalData(Seq("G" -> Seq("Item_1", "Item_2"), "H" -> Seq("Item_2")),
+        Map("Item_9" -> 3L), Seq(Seq("Item_5"))),
+      Periods.compute(java.time.ZonedDateTime.of(2024, 2, 5, 12, 0, 0, 0, java.time.ZoneOffset.UTC)))
+    val plan = df.queryExecution.executedPlan
+    assert(countOf[WindowExec](df) == 0, plan)
+    assert(countOf[SortMergeJoinExec](df) == 0, plan)
+    assert(countOf[ShuffleExchangeExec](df) <= 2, plan)
   }
 }

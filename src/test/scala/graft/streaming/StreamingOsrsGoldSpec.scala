@@ -92,4 +92,16 @@ class StreamingOsrsGoldSpec extends AnyFunSuite with SparkTestBase {
     assert(canon(gold.readTable(spark, "valuable_drops_summary").get) == live)
     assert(gold.rawStore.read(spark).get.count() == 4L)
   }
+
+  test("applyBatch releases its silver caches") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sosrs3").toString
+    val gold = new StreamingOsrsGold(root, runTime)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Seq(batch1, batch2, batch1).zipWithIndex.foreach { case (rows, i) =>
+      gold.applyBatch(rows.toDF("id", "timestamp", "raw_content"), i.toLong)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(gold.rawStore.read(spark).get.count() == 7L)
+  }
 }
