@@ -67,18 +67,22 @@ import org.apache.spark.sql.functions._
 object GraphIndex {
 
   /** Build and persist generation 1 (or the next generation, on an
-    * existing path) from scratch.
+    * existing path) from scratch. Ids are made unique first with the
+    * maintenance batch's rule (one row per id, deterministic `max`
+    * vector), so every stored node — and every probe result — carries
+    * its id once.
     */
   def write(spark: SparkSession, path: String, vectors: DataFrame,
       idCol: String, vecCol: String, k: Int, rounds: Int,
       maxDegree: Int = 0, simPrecision: Int = -1,
       retain: Int = 1): Unit = {
-    val edges = NnDescent.knnGraph(vectors, idCol, vecCol, k, rounds,
+    val nodes = vectors.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .groupBy("id").agg(max("vec").as("vec"))
+    val edges = NnDescent.knnGraph(nodes, "id", "vec", k, rounds,
         maxDegree = maxDegree, simPrecision = simPrecision)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cos"))
-    val nodes = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
     commit(spark, path, nodes, edges, retain)
   }
 

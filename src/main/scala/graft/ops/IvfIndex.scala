@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *     resolve via [[centDir]] (keyed-if-present, legacy otherwise),
   *     [[compact]] carries the keyed dir to the compacted tree name,
   *     and [[rollback]] retires it with its tree;
-  *   - `lists_v{n}/` (every [[write]] and [[compact]] emits the next
-  *     version; a pre-versioning `lists/` tree is still resolvable) —
+  *   - `lists_v{n}/` (every [[write]], [[compact]] and update batch
+  *     emits the next version; a pre-versioning `lists/` tree is still
+  *     resolvable) —
   *     (neighbor_id, vec, vnorm) PARTITIONED BY `list`: each corpus
   *     vector exactly once, keyed by its Voronoi cell. Readers resolve
   *     the live tree via [[liveLists]] — the highest
@@ -80,22 +81,18 @@ object IvfIndex {
     val next = s"lists_v${maxVersion(fs, root) + 1}"
     // The codebook and lists trees are independent (the model-sized cent
     // frame both read is cheap to evaluate twice) — overlap the writes
-    // (guide §2.6). Crash atomicity is unchanged: the commit point was
-    // and remains the lists tree's _SUCCESS, and a torn centroids
-    // overwrite next to an uncommitted lists tree was already reachable
-    // under the sequential order (centroids landed first).
+    // (guide §2.6). The commit point is still the lists tree's
+    // _SUCCESS, but the overlap adds a crash pairing the sequential order
+    // could not produce: a COMMITTED new tree beside a torn centroids
+    // overwrite. Readers route with whatever centroid files landed (the
+    // recall-only caveat above) or fail the codebook read if none did;
+    // pair-atomicity needs [[refit]]'s version-keyed codebook.
     Par.jobs(
       () => cent.select(col("__cid").as("centroid_id"),
           col("__cv").as("centroid"), col("__cn").as("cnorm"))
         .write.mode("overwrite").parquet(s"$path/centroids"),
-      () => Similarity.invertedLists(corpus, idCol, vecCol, cent)
-        .select(col("__list").as("list"), col("neighbor_id"),
-          col("__nv").as("vec"), col("__nn").as("vnorm"))
-        .repartition(col("list"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("list")
-        .parquet(s"$path/$next"))
+      () => IvfLists.write(listRows(corpus, idCol, vecCol, cent),
+        s"$path/$next", "overwrite", maxRecordsPerFile))
     // Only now — the new tree is committed and outranks everything —
     // drop superseded trees beyond the retention window. `retain`
     // keeps the newest N COMMITTED trees (default 1 — live only): a
@@ -113,15 +110,6 @@ object IvfIndex {
     retireSuperseded(fs, root, path, retain, consumed = Set.empty)
   }
 
-  /** Post-commit cleanup shared by [[write]] and [[compact]]: keep the
-    * newest `retain` COMMITTED list trees (with their keyed tombstone
-    * dirs — a retained tree's masks are its serving state), delete
-    * every other `lists*` tree (torn leftovers included), the legacy
-    * unversioned `lists`/`tombstones`, and the tombstone dirs in
-    * `consumed` (masks a compaction just folded — kept trees whose
-    * masks were consumed roll back to their PRE-delete state, which is
-    * exactly the bad-delete-shipped undo [[rollback]] exists for).
-    */
   /** Committed `lists_v{n}` tree names under `path`, version-ascending —
     * the ONE definition of "committed" retention, rollback and reads
     * must agree on.
@@ -137,6 +125,16 @@ object IvfIndex {
       .sortBy(_.stripPrefix("lists_v").toInt)
   }
 
+  /** Post-commit cleanup shared by [[write]], [[refit]] and
+    * every list-tree commit ([[compact]], update batches): keep the
+    * newest `retain` COMMITTED list trees (with their keyed tombstone
+    * dirs — a retained tree's masks are its serving state), delete
+    * every other `lists*` tree (torn leftovers included), the legacy
+    * unversioned `lists`/`tombstones`, and the tombstone dirs in
+    * `consumed` (masks a compaction just folded — kept trees whose
+    * masks were consumed roll back to their PRE-delete state, which is
+    * exactly the bad-delete-shipped undo [[rollback]] exists for).
+    */
   private def retireSuperseded(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, path: String, retain: Int,
       consumed: Set[String]): Unit = {
@@ -253,33 +251,35 @@ object IvfIndex {
       delta: DataFrame,
       idCol: String,
       vecCol: String,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    val cent = storedCentFrame(spark, path)
-    Similarity.invertedLists(delta, idCol, vecCol, cent)
+      maxRecordsPerFile: Long = 5000000L): Unit =
+    IvfLists.write(listRows(delta, idCol, vecCol, storedCentFrame(spark, path)),
+      s"$path/${liveLists(spark, path)}", "append", maxRecordsPerFile)
+
+  /** Corpus rows assigned to their Voronoi cell under `cent`, in the
+    * stored list layout (list, neighbor_id, vec, vnorm).
+    */
+  private def listRows(corpus: DataFrame, idCol: String, vecCol: String,
+      cent: DataFrame): DataFrame =
+    Similarity.invertedLists(corpus, idCol, vecCol, cent)
       .select(col("__list").as("list"), col("neighbor_id"),
         col("__nv").as("vec"), col("__nn").as("vnorm"))
-      .repartition(col("list"))
-      .write.mode("append")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("list")
-      .parquet(s"$path/${liveLists(spark, path)}")
-  }
 
   /** One micro-batch of streaming index maintenance — the foreachBatch
     * body behind [[graft.streaming.StreamingIvfMaintenance]]. The batch
-    * carries an `opCol` of 'add' / 'delete' rows; adds are assigned with
-    * the stored codebook and appended, deletes tombstone.
+    * carries an `opCol` of 'add' / 'delete' rows, classified by one
+    * aggregate; adds are assigned with the stored codebook and appended,
+    * deletes tombstone.
     *
     * IDEMPOTENT under at-least-once replay, which is what [[append]]
-    * alone is not: before appending, the batch's adds are anti-joined
-    * against the ids ALREADY STORED in the lists this batch touches —
-    * the check reads only those `list=` partitions (static partition
-    * pruning on the collected list ids, a codebook-bounded driver
-    * value), and only the neighbor_id column, so its cost tracks the
-    * batch's own fan-out, not the corpus. A replayed batch (crash before
-    * the checkpoint advanced) or a torn append's re-run therefore
-    * appends exactly the rows that are missing; tombstone deletes are
-    * anti-join semantics and already replay-clean.
+    * alone is not: the batch's adds are anti-joined against the ids
+    * ALREADY STORED in the lists this batch touches — an in-plan
+    * semi-join on the `list` partition key, so dynamic partition
+    * pruning reads only those partitions' neighbor_id column and the
+    * check's cost tracks the batch's own fan-out, not the corpus. A
+    * replayed batch (crash before the checkpoint advanced) or a torn
+    * append's re-run therefore appends exactly the rows that are
+    * missing; tombstone deletes are anti-join semantics and already
+    * replay-clean.
     *
     * COROLLARY, stated because it is invisible from the types: the
     * touched-list check is EXACTLY a replay guard, no more. A replayed
@@ -290,14 +290,13 @@ object IvfIndex {
     * new vector still assigns to a list holding the stored copy; if it
     * assigns ELSEWHERE, the default check cannot see the stored copy and
     * the id lands live in two lists — probes then return it twice, with
-    * both vectors. Adds are inserts, not upserts; an update is
-    * delete → [[compact]] → add (the tombstone masks until the fold).
-    * Callers whose feed may carry re-embedded vectors for live ids
-    * should set `strictLiveCheck = true`: the surviving adds are then
-    * also checked against the FULL live tree's neighbor_id column (the
-    * batch side broadcasts, so the scan is one column wide and never
-    * shuffles the index) — making add-of-a-live-id an unconditional,
-    * logged no-op at the cost of one id-column scan per batch.
+    * both vectors. Adds are inserts, not upserts; an update is a
+    * same-batch delete + add (below). Callers whose feed may carry
+    * re-embedded vectors for live ids should set `strictLiveCheck =
+    * true`: the adds are then checked against the FULL tree's
+    * neighbor_id column instead — making add-of-a-live-id an
+    * unconditional, logged no-op at the cost of one id-column scan per
+    * batch.
     *
     * Same single-writer assumption as every maintenance op here, and the
     * [[append]] contract still applies across batches: a delete is
@@ -305,18 +304,16 @@ object IvfIndex {
     * a tombstoned-but-uncompacted id lands masked (spec-gated:
     * delete → compact → re-add resurrects).
     *
-    * SAME-ID delete + add in ONE batch is an UPDATE, and it is
-    * supported by sequencing the documented recipe inside the batch
-    * boundary: all deletes apply first, the index COMPACTS (folding the
-    * masks — the terminal-until-compact rule honored, not bypassed),
-    * then the adds append fresh. The compact is a full survivor rewrite,
-    * so an update-carrying batch costs a compaction — the price of an
-    * upsert on a pure-mask index, paid only when one is present (and
-    * logged). Replay-safe: a redelivered update batch re-deletes the
-    * re-added row, re-compacts, and re-appends the identical vector —
-    * converging to the same index, one wasted rewrite. `retain` passes
-    * through to that compact so a retention discipline on the tree is
-    * not clobbered by maintenance.
+    * SAME-ID delete + add in ONE batch is an UPDATE, and an update
+    * batch commits ONE new list tree from one partitioned write (the
+    * [[compact]] commit): the stored rows minus (pending tombstones ∪
+    * the batch's deletes), plus the adds guarded against those
+    * survivors. One survivor rewrite per update-carrying batch, leaving
+    * one file per list and no tombstones; the tree is never empty, since
+    * an update always keeps its add. A redelivered update batch re-masks
+    * and re-adds the same vector — it converges. `retain` passes through,
+    * and the retained tree keeps its pending tombstones, so a
+    * [[rollback]] restores exactly the pre-batch probes.
     */
   def applyMaintenanceBatch(
       spark: SparkSession,
@@ -328,108 +325,32 @@ object IvfIndex {
       maxRecordsPerFile: Long = 5000000L,
       strictLiveCheck: Boolean = false,
       retain: Int = 1): Unit = {
-    val adds = batch.filter(col(opCol) === "add")
-      .select(col(idCol), col(vecCol))
-      // An id twice in one batch (transport retry inside the batch) must
-      // not land twice; vector choice is deterministic (max) not arrival
-      // order.
-      .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
-    val dels = batch.filter(col(opCol) === "delete").select(col(idCol))
-    // Update detection (batch-sized semi-join): ids carrying BOTH a
-    // delete and an add this batch.
-    val upsert = !adds.join(dels, Seq(idCol), "left_semi").isEmpty
-    if (upsert) {
-      System.err.println("[graft] IvfIndex.applyMaintenanceBatch: batch " +
-        "carries same-id delete+add (update) — applying deletes, " +
-        "compacting, then appending (a compaction per update batch is " +
-        "the pure-mask price)")
-      if (!dels.isEmpty) delete(spark, path, dels, idCol)
-      compact(spark, path, maxRecordsPerFile, retain)
-      // Compact keeps the mask (early return) exactly when the batch
-      // tombstoned EVERY stored row — fold-to-empty would commit an
-      // unreadable tree. Without special handling the update's re-adds
-      // would then be dropped by the already-stored anti-join (or land
-      // permanently masked): silent data loss. The honest form of a
-      // whole-index update IS a rebuild — write the adds as a fresh
-      // generation under the STORED coarse codebook (assignments
-      // identical to an append's), which also clears the consumed mask.
-      if (tombstones(spark, path).isDefined) {
-        System.err.println("[graft] IvfIndex.applyMaintenanceBatch: the " +
-          "update batch masked every stored row — rebuilding from the " +
-          "batch's adds under the stored codebook (fold-to-empty is " +
-          "unreadable)")
-        // Eager: write() OVERWRITES $path/centroids as its first step —
-        // a lazy read from the same location would race its own
-        // overwrite (FILE_NOT_EXIST mid-scan). Read via centDir so a
-        // post-refit rebuild carries the refit codebook forward (the
-        // rebuild re-lands it as the legacy dir, correctly paired).
-        val cb = spark.read.parquet(centDir(spark, path))
-          .select(col("centroid_id"), col("centroid"))
-          .localCheckpoint(eager = true)
-        write(path, adds, idCol, vecCol, cb,
-          maxRecordsPerFile = maxRecordsPerFile, retain = retain)
-        Checkpoints.release(cb)
-        return
-      }
+    val shape = IvfLists.classify(batch, idCol, vecCol, opCol)
+    val counts = new IvfLists.GuardCounts(shape.adds)
+    // Adds assigned with the stored codebook, in the stored column types,
+    // behind the replay guard over `stored`.
+    def fresh(stored: DataFrame): DataFrame = {
+      val adds = IvfLists.adds(batch, idCol, vecCol, opCol)
+        .select(col(idCol),
+          col(vecCol).cast(stored.schema("vec").dataType).as(vecCol))
+      IvfLists.guard(
+        listRows(adds, idCol, vecCol, storedCentFrame(spark, path)),
+        stored, strictLiveCheck, counts)
     }
-    val cent = storedCentFrame(spark, path)
-    // Assign once; the boundary probe (distinct touched lists) and the
-    // anti-join both reread this frame.
-    val assigned = Similarity.invertedLists(adds, idCol, vecCol, cent)
-      .localCheckpoint(eager = false)
-    val touched = assigned.select(col("__list")).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (touched.nonEmpty) {
-      val live = liveLists(spark, path)
-      val existing = spark.read.parquet(s"$path/$live")
-        .filter(col("list").isin(touched: _*))
-        .select(col("neighbor_id"))
-      // Surface the adds the idempotency anti-join is about to drop (see
-      // the Scaladoc corollary): a batch-sized semi-join over the already
-      // list-pruned existing frame, so the count tracks the batch.
-      // Strict mode: surviving adds are also checked against the FULL
-      // tree's id column. The batch-id side broadcasts into a semi-join
-      // over the one-column scan, so the hits frame is batch-bounded and
-      // the index is never shuffled; checkpointed because it feeds both
-      // the drop count and the anti-join.
-      val liveElsewhere =
-        if (!strictLiveCheck) None
-        else Some(spark.read.parquet(s"$path/$live")
-          .select(col("neighbor_id"))
-          .join(broadcast(assigned.select(col("neighbor_id"))),
-            Seq("neighbor_id"), "left_semi")
-          .distinct()
-          .localCheckpoint(eager = true))
-      val dropped = assigned
-        .join(existing, Seq("neighbor_id"), "left_semi").count() +
-        liveElsewhere.map(h => assigned
-          .join(existing, Seq("neighbor_id"), "left_anti")
-          .join(broadcast(h), Seq("neighbor_id"), "left_semi")
-          .count()).getOrElse(0L)
-      if (dropped > 0) System.err.println(
-        s"[graft] IvfIndex.applyMaintenanceBatch: $dropped add(s) for " +
-          "already-live ids ignored (adds are not upserts; update = " +
-          "delete -> compact -> add)")
-      val fresh = assigned.join(existing, Seq("neighbor_id"), "left_anti")
-      liveElsewhere.map(h => fresh.join(broadcast(h),
-          Seq("neighbor_id"), "left_anti")).getOrElse(fresh)
-        .select(col("__list").as("list"), col("neighbor_id"),
-          col("__nv").as("vec"), col("__nn").as("vnorm"))
-        .repartition(col("list"))
-        .write.mode("append")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("list")
-        .parquet(s"$path/$live")
-      liveElsewhere.foreach(Checkpoints.release)
+    if (shape.update) {
+      val survivors = liveRows(spark, path,
+        Some(IvfLists.deletes(batch, idCol, opCol)))
+      commitLists(spark, path, survivors.unionByName(fresh(survivors)),
+        maxRecordsPerFile, retain, consumed = Set.empty)
+    } else {
+      val tree = s"$path/${liveLists(spark, path)}"
+      if (shape.adds > 0) IvfLists.write(fresh(IvfLists.read(spark, tree)),
+        tree, "append", maxRecordsPerFile)
+      if (shape.deletes)
+        delete(spark, path, IvfLists.deletes(batch, idCol, opCol),
+          "neighbor_id")
     }
-    // Non-update deletes apply after the adds (order irrelevant for
-    // disjoint id sets — kept for minimal-diff history); update batches
-    // already applied and folded them above.
-    if (!upsert && !dels.isEmpty) delete(spark, path, dels, idCol)
-    // A long-running maintenance job otherwise accumulates one batch-sized
-    // persisted frame per micro-batch until a JVM GC lets ContextCleaner
-    // notice the dead RDDs ([[graft.ops.Checkpoints]] discipline).
-    Checkpoints.release(assigned)
+    counts.log("IvfIndex")
   }
 
   /** Mark stored vectors DELETED without touching the list trees: ids
@@ -467,10 +388,6 @@ object IvfIndex {
       .write.mode("append")
       .parquet(s"$path/tombstones_${liveLists(spark, path)}")
 
-  /** The live tombstone set — the dirs keyed to the LIVE list tree plus
-    * the legacy unversioned `tombstones/` (pre-migration indexes);
-    * empty when none have been written.
-    */
   /** REFIT the coarse codebook from the index's OWN live rows and
     * rebuild — the routing layer's drift ACTION ([[routingDrift]] /
     * StreamingIvfDrift alarm; [[graft.ops.PqIndex.refit]]'s sibling,
@@ -492,19 +409,13 @@ object IvfIndex {
   def refit(spark: SparkSession, path: String, centroidMod: Long,
       centroidCap: Long = Long.MaxValue,
       maxRecordsPerFile: Long = 5000000L, retain: Int = 1): Unit = {
-    val cur = liveLists(spark, path)
-    val listsStored = spark.read.parquet(s"$path/$cur")
-    val liveRows = tombstones(spark, path) match {
-      case Some(t) => listsStored.join(t, Seq("neighbor_id"), "left_anti")
-      case None => listsStored
-    }
     // The corpus frame stays LAZY (it is consumed fully by the list
     // write below, before the old tree retires; a data-sized
     // checkpoint would double-materialize the index) — but the
     // codebook-sized centroid frame is EAGER: it feeds the codebook
     // write, the require, and the broadcast assignment, and re-deriving
     // it lazily would re-scan the full index once per consumer.
-    val corpus = liveRows.select(col("neighbor_id"), col("vec"))
+    val corpus = liveRows(spark, path).select(col("neighbor_id"), col("vec"))
     val centRows = corpus
       .filter(pmod(col("neighbor_id"), lit(centroidMod)) === 0 &&
         col("neighbor_id") < centroidCap)
@@ -538,14 +449,8 @@ object IvfIndex {
     cent.select(col("__cid").as("centroid_id"),
         col("__cv").as("centroid"), col("__cn").as("cnorm"))
       .write.mode("overwrite").parquet(s"$path/centroids_$next")
-    Similarity.invertedLists(corpus, "neighbor_id", "vec", cent)
-      .select(col("__list").as("list"), col("neighbor_id"),
-        col("__nv").as("vec"), col("__nn").as("vnorm"))
-      .repartition(col("list"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("list")
-      .parquet(s"$path/$next")
+    IvfLists.write(listRows(corpus, "neighbor_id", "vec", cent),
+      s"$path/$next", "overwrite", maxRecordsPerFile)
     Checkpoints.release(centRows)
     retireSuperseded(fs, root, path, retain, consumed = Set.empty)
   }
@@ -598,7 +503,7 @@ object IvfIndex {
     */
   private[graft] def storedCentFrame(spark: SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(centDir(spark, path))
+    IvfLists.read(spark, centDir(spark, path))
       .select(col("centroid_id").cast("long").as("__cid"),
         col("centroid").as("__cv"), col("cnorm").as("__cn"))
 
@@ -622,13 +527,7 @@ object IvfIndex {
     */
   private def liveRoutingErr(spark: SparkSession, path: String,
       centStored: DataFrame): DataFrame = {
-    val listsStored = spark.read
-      .parquet(s"$path/${liveLists(spark, path)}")
-    val live = tombstones(spark, path) match {
-      case Some(t) => listsStored.join(t, Seq("neighbor_id"), "left_anti")
-      case None => listsStored
-    }
-    live
+    liveRows(spark, path)
       .select(col("list").cast("long").as("__cid"), col("vec"),
         col("vnorm"))
       .join(broadcast(centStored), Seq("__cid"))
@@ -639,6 +538,10 @@ object IvfIndex {
           .cast("long").as("err"))
   }
 
+  /** The live tombstone set — the dirs keyed to the LIVE list tree plus
+    * the legacy unversioned `tombstones/` (pre-migration indexes);
+    * empty when none have been written.
+    */
   private[ops] def tombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -649,7 +552,18 @@ object IvfIndex {
         p.getFileSystem(conf).exists(p)
       }
     if (existing.isEmpty) None
-    else Some(existing.map(spark.read.parquet(_)).reduce(_ unionByName _))
+    else Some(existing.map(IvfLists.read(spark, _)).reduce(_ unionByName _))
+  }
+
+  /** The live tree's rows minus the tombstone set and the optional
+    * `alsoMasked` ids (a `neighbor_id` column) — the survivor frame
+    * every fold, refit, drift scan and probe reads.
+    */
+  private def liveRows(spark: SparkSession, path: String,
+      alsoMasked: Option[DataFrame] = None): DataFrame = {
+    val stored = IvfLists.read(spark, s"$path/${liveLists(spark, path)}")
+    (tombstones(spark, path) ++ alsoMasked).reduceOption(_ unionByName _)
+      .fold(stored)(m => stored.join(m, Seq("neighbor_id"), "left_anti"))
   }
 
   /** Resolve the LIVE inverted-list directory name: the highest
@@ -692,24 +606,12 @@ object IvfIndex {
       path: String,
       maxRecordsPerFile: Long = 5000000L,
       retain: Int = 1): Unit = {
-    require(retain >= 1, s"retain must be >= 1, got $retain")
     val cur = liveLists(spark, path)
-    val conf0 = spark.sparkContext.hadoopConfiguration
-    val root0 = new org.apache.hadoop.fs.Path(path)
-    val fs0 = root0.getFileSystem(conf0)
-    // Number past EVERY existing version dir, committed or not — a stale
-    // uncommitted leftover (crashed compaction) must never collide with
-    // or outrank the copy about to be written.
-    val next = s"lists_v${maxVersion(fs0, root0) + 1}"
-    val live = spark.read.parquet(s"$path/$cur")
     // Fold tombstones into the rewrite: the compacted tree is born
     // clean, and the tombstone files are cleared only AFTER the tree
     // commits — a crash in between leaves tombstones re-filtering rows
     // that no longer exist, which is a no-op (see [[delete]]).
-    val folded = tombstones(spark, path) match {
-      case Some(t) => live.join(t, Seq("neighbor_id"), "left_anti")
-      case None => live
-    }
+    val folded = liveRows(spark, path)
     // An ALL-TOMBSTONED index must keep its mask instead of committing
     // an empty tree: a partitioned overwrite of zero rows lands a
     // `_SUCCESS` with no parquet files, and every later read of the
@@ -725,40 +627,49 @@ object IvfIndex {
         "masked ids needs a rebuild (write), which clears it")
       return
     }
-    // A post-[[refit]] tree carries a version-keyed codebook; the
-    // compacted copy keeps the SAME cells, so the pairing must travel
-    // to the new tree name — cloned BEFORE the tree commits (an
-    // uncommitted tree is invisible, so a crash in between changes
-    // nothing; committing first would open a window where the new tree
-    // resolves against the legacy pre-refit codebook).
-    val keyedCur = new org.apache.hadoop.fs.Path(s"$path/centroids_$cur")
-    if (fs0.exists(keyedCur))
-      TreeClone.linkOrCopy(keyedCur,
-        new org.apache.hadoop.fs.Path(s"$path/centroids_$next"), conf0)
-    folded
-      .repartition(col("list"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("list")
-      .parquet(s"$path/$next")
-    // Retention as in [[write]] (`retain` newest committed trees kept,
-    // for [[rollback]]), plus the folded generation's masks
-    // (version-keyed + legacy) as `consumed`: the committed new tree
-    // never consults them, and clearing them means a rollback restores
-    // `cur` to its PRE-delete state — rollback undoes the compact AND
-    // the deletes it folded, which is the bad-delete-shipped undo.
-    retireSuperseded(fs0, root0, path, retain,
+    // The folded generation's masks (version-keyed + legacy) are
+    // `consumed`: the committed new tree never consults them, and
+    // clearing them means a rollback restores `cur` to its PRE-delete
+    // state — rollback undoes the compact AND the deletes it folded,
+    // which is the bad-delete-shipped undo.
+    commitLists(spark, path, folded, maxRecordsPerFile, retain,
       consumed = Set(s"tombstones_$cur"))
   }
 
+  /** Commit `rows` (the stored list layout) as the next list tree — the
+    * rewrite [[compact]] and an update batch share. Numbered past EVERY
+    * version dir, committed or not (a crashed writer's leftover must
+    * never collide with or outrank it); `consumed` names tombstone dirs
+    * the rewrite folded. A post-[[refit]] tree's keyed codebook travels
+    * to the new name BEFORE the tree commits (committing first would
+    * pair the new tree with the legacy pre-refit codebook).
+    */
+  private def commitLists(spark: SparkSession, path: String,
+      rows: DataFrame, maxRecordsPerFile: Long, retain: Int,
+      consumed: Set[String]): Unit = {
+    require(retain >= 1, s"retain must be >= 1, got $retain")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    val cur = liveLists(spark, path)
+    val next = s"lists_v${maxVersion(fs, root) + 1}"
+    val keyedCur = new org.apache.hadoop.fs.Path(s"$path/centroids_$cur")
+    if (fs.exists(keyedCur))
+      TreeClone.linkOrCopy(keyedCur,
+        new org.apache.hadoop.fs.Path(s"$path/centroids_$next"), conf)
+    IvfLists.write(rows, s"$path/$next", "overwrite", maxRecordsPerFile)
+    retireSuperseded(fs, root, path, retain, consumed)
+  }
+
   /** Retire the LIVE list tree so the previous committed one serves
-    * again — possible only when the superseding [[write]]/[[compact]]
-    * ran with `retain` > 1. The restored tree serves with whatever
-    * keyed tombstones it still has: a rebuild keeps the old tree's
-    * masks (its deletes were serving state independent of the rebuild),
-    * while a completed compact cleared the masks it folded — so
-    * delete → compact(retain=2) → rollback RESURRECTS the deleted ids
-    * (the rollback undoes the delete+compact pair as one commit).
+    * again — possible only when the superseding [[write]]/[[compact]]/
+    * update batch ran with `retain` > 1. The restored tree serves with
+    * whatever keyed tombstones it still has: a rebuild or an update
+    * batch keeps the old tree's masks (its deletes were serving state
+    * independent of the commit being undone), while a completed compact
+    * cleared the masks it folded — so delete → compact(retain=2) →
+    * rollback RESURRECTS the deleted ids (the rollback undoes the
+    * delete+compact pair as one commit).
     *
     * Same number-reuse caveat as [[graft.ops.VersionedTree.rollback]]:
     * the next commit re-numbers into the retired slot, so a reader that
@@ -800,46 +711,16 @@ object IvfIndex {
       vecCol: String,
       k: Int,
       nprobe: Int = 3): DataFrame = {
-    val centStored = spark.read.parquet(centDir(spark, path))
-    val listsStored = spark.read.parquet(s"$path/${liveLists(spark, path)}")
-    // The partition column comes back through directory-name inference,
-    // which narrows numeric types (long → int). Align the CODEBOOK side
-    // to the inferred type — casting the broadcast-small side keeps the
-    // partitioned scan's join key a bare partition attribute, which is
-    // what keeps dynamic partition pruning eligible. Ids that actually
-    // wrote a lists/ directory fit the inferred type by construction;
-    // an EMPTY centroid (no assigned vectors) can carry an id beyond
-    // that range, and a bare non-ANSI cast would wrap it onto a real
-    // list id, mis-routing its probes — so out-of-range ids map to a
-    // NULL join key instead. NULL never equi-joins, which is exactly
-    // the empty centroid's semantics: probing it contributes no rows.
-    val listType = listsStored.schema("list").dataType
-    val idRange: Option[(Long, Long)] = listType match {
-      case org.apache.spark.sql.types.ByteType =>
-        Some((Byte.MinValue.toLong, Byte.MaxValue.toLong))
-      case org.apache.spark.sql.types.ShortType =>
-        Some((Short.MinValue.toLong, Short.MaxValue.toLong))
-      case org.apache.spark.sql.types.IntegerType =>
-        Some((Int.MinValue.toLong, Int.MaxValue.toLong))
-      case _ => None // long/string/decimal inference: cast is total
-    }
-    val safeId = idRange match {
-      case Some((lo, hi)) =>
-        when(col("centroid_id").between(lo, hi), col("centroid_id"))
-      case None => col("centroid_id")
-    }
-    val cent = centStored.select(
-      safeId.cast(listType).as("__cid"),
-      col("centroid").as("__cv"), col("cnorm").as("__cn"))
     // Tombstoned rows leave the candidate stream BEFORE scoring — keyed
     // anti-join on neighbor_id, broadcast by AQE while the tombstone set
     // is compaction-bounded. Placed after the list scan so dynamic
     // partition pruning on `list` is undisturbed.
-    val listsLive = tombstones(spark, path) match {
-      case Some(t) => listsStored.join(t, Seq("neighbor_id"), "left_anti")
-      case None => listsStored
-    }
-    val lists = listsLive.select(col("list").as("__list"),
+    val live = liveRows(spark, path)
+    val cent = IvfLists.read(spark, centDir(spark, path)).select(
+      IvfLists.listKey(col("centroid_id"), live.schema("list").dataType)
+        .as("__cid"),
+      col("centroid").as("__cv"), col("cnorm").as("__cn"))
+    val lists = live.select(col("list").as("__list"),
       col("neighbor_id"), col("vec").as("__nv"), col("vnorm").as("__nn"))
     Similarity.probeInvertedLists(probes, idCol, vecCol, k, cent, lists, nprobe)
   }

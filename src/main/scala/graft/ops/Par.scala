@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.SparkContext
+
 /** Overlap INDEPENDENT Spark actions from driver threads (guide §2.6):
   * actions are only sequential because driver code calls them
   * sequentially, so a commit that must land two or three parquet trees
@@ -12,25 +14,45 @@ package graft.ops
   * writes) and every shared upstream frame must already be materialized
   * (eager checkpoint or a prior action) — two concurrent jobs racing to
   * materialize one lazy cache duplicate its compute (the r18 SetSimJoin
-  * lesson). All threads are joined before returning; the first failure
-  * is rethrown after every thread has stopped, so a caller's
-  * commit-marker write stays strictly after every tree landed or not at
-  * all.
+  * lesson). The thunks run under one job group per call, and the first
+  * failure (or an interrupt of the caller) cancels its running and
+  * later jobs, so a commit never waits for a doomed tree. All threads
+  * are joined before returning, and the first failure is rethrown with
+  * the later ones suppressed — a caller's commit marker lands strictly
+  * after every tree landed, or not at all.
   */
 object Par {
 
   def jobs(thunks: (() => Unit)*): Unit = {
     if (thunks.sizeIs <= 1) { thunks.foreach(_()); return }
+    val sc = SparkContext.getOrCreate()
+    val group = s"graft-par-${java.util.UUID.randomUUID()}"
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val ts = thunks.map { t =>
-      val th = new Thread(() => try t() catch {
-        case e: Throwable => errs.add(e): Unit
+      val th = new Thread(() => {
+        sc.setJobGroup(group, "graft.ops.Par")
+        try t() catch {
+          case e: Throwable =>
+            errs.add(e) // before the cancel: its fallout queues behind
+            if (failed.compareAndSet(false, true))
+              sc.cancelJobGroupAndFutureJobs(group)
+        }
       })
       th.setDaemon(true)
       th.start()
       th
     }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    try ts.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        sc.cancelJobGroupAndFutureJobs(group)
+        throw e
+    }
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 }

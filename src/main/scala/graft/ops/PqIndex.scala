@@ -98,10 +98,6 @@ object PqIndex {
   def rollback(spark: SparkSession, path: String): Unit =
     versions.rollback(spark, path): Unit
 
-  /** Build + commit a generation. `centroids` is the coarse codebook as
-    * (centroid_id, centroid) — pass the same frame the inline path
-    * derives so artifact and inline routing agree.
-    */
   /** Routed + PQ-encoded rows in ONE corpus pass: the inverted-lists
     * frame already carries each row's full vector (`__nv`), and the PQ
     * code is a map-only projection of that same vector — so encoding
@@ -130,6 +126,10 @@ object PqIndex {
         col("__nv").as("vec"), col("__nn").as("vnorm"))
   }
 
+  /** Build + commit a generation. `centroids` is the coarse codebook as
+    * (centroid_id, centroid) — pass the same frame the inline path
+    * derives so artifact and inline routing agree.
+    */
   def write(spark: SparkSession, path: String, corpus: DataFrame,
       idCol: String, vecCol: String, centroids: DataFrame,
       model: PqModel, maxRecordsPerFile: Long = 5000000L,
@@ -145,11 +145,8 @@ object PqIndex {
         () => cent.select(col("__cid").as("centroid_id"),
             col("__cv").as("centroid"), col("__cn").as("cnorm"))
           .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids"),
-        () => encodedLists(corpus, idCol, vecCol, cent, model)
-          .repartition(col("list"))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy("list").parquet(s"$gen/lists"),
+        () => IvfLists.write(encodedLists(corpus, idCol, vecCol, cent, model),
+          s"$gen/lists", "overwrite", maxRecordsPerFile),
         () => writeModel(spark, gen, model))
     }: Unit
   }
@@ -173,18 +170,18 @@ object PqIndex {
   def append(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, vecCol: String,
       maxRecordsPerFile: Long = 5000000L): Unit = {
-    val live = liveVersion(spark, path)
-    val model = readModel(spark, s"$path/$live")
-    val cent = spark.read.parquet(s"$path/$live/centroids").select(
+    val gen = s"$path/${liveVersion(spark, path)}"
+    IvfLists.write(encodedLists(delta, idCol, vecCol, storedCent(spark, gen),
+      readModel(spark, gen)), s"$gen/lists", "append", maxRecordsPerFile)
+  }
+
+  /** A generation's coarse codebook in the [[Similarity.centFrame]]
+    * shape (__cid, __cv, __cn).
+    */
+  private def storedCent(spark: SparkSession, gen: String): DataFrame =
+    IvfLists.read(spark, s"$gen/centroids").select(
       col("centroid_id").as("__cid"), col("centroid").as("__cv"),
       col("cnorm").as("__cn"))
-    encodedLists(delta, idCol, vecCol, cent, model)
-      .repartition(col("list"))
-      .write.mode("append")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("list")
-      .parquet(s"$path/$live/lists")
-  }
 
   /** REFIT the PQ codebooks on the index's own current live corpus and
     * commit the re-encoded index as a fresh generation — the ACTION the
@@ -217,7 +214,7 @@ object PqIndex {
       maxRecordsPerFile: Long = 5000000L, retain: Int = 1): PqModel = {
     val live = liveVersion(spark, path)
     val stored = readModel(spark, s"$path/$live")
-    val corpus = liveCorpus(spark, path, live)
+    val corpus = liveCorpus(spark, s"$path/$live")
     require(!corpus.isEmpty,
       s"refit of $path: no live (unmasked) rows — an empty index has " +
         "nothing to fit; repopulate with write()")
@@ -226,7 +223,7 @@ object PqIndex {
       stored.models.head.scale)
     // Model-sized; eager because write() commits a new generation and
     // then retires the one this frame reads from.
-    val cent = spark.read.parquet(s"$path/$live/centroids")
+    val cent = IvfLists.read(spark, s"$path/$live/centroids")
       .select(col("centroid_id"), col("centroid"))
       .localCheckpoint(eager = true)
     // The corpus frame stays LAZY — write() consumes it fully inside
@@ -249,7 +246,7 @@ object PqIndex {
   def meanQuantizationError(spark: SparkSession, path: String): Double = {
     val live = liveVersion(spark, path)
     val model = readModel(spark, s"$path/$live")
-    val r = Pq.errAgg(liveCorpus(spark, path, live),
+    val r = Pq.errAgg(liveCorpus(spark, s"$path/$live"),
       "neighbor_id", "vec", model).collect()(0)
     require(r.getLong(0) > 0,
       s"meanQuantizationError of $path: no live rows")
@@ -260,35 +257,42 @@ object PqIndex {
     * lists-minus-tombstones corpus [[refit]] and
     * [[meanQuantizationError]] share.
     */
-  private def liveCorpus(spark: SparkSession, path: String,
-      live: String): DataFrame = {
-    val lists = spark.read.parquet(s"$path/$live/lists")
-      .select(col("neighbor_id"), col("vec"))
-    tombstonesOpt(spark, s"$path/$live") match {
-      case None => lists
-      case Some(t) =>
-        lists.join(broadcast(t.distinct()), Seq("neighbor_id"),
-          "left_anti")
-    }
+  private def liveCorpus(spark: SparkSession, gen: String): DataFrame =
+    survivors(spark, gen).select(col("neighbor_id"), col("vec"))
+
+  /** A generation's stored list rows minus its tombstones and the
+    * optional `alsoMasked` ids (a `neighbor_id` column). The mask is
+    * tombstone- plus batch-sized — broadcast.
+    */
+  private def survivors(spark: SparkSession, gen: String,
+      alsoMasked: Option[DataFrame] = None): DataFrame = {
+    val lists = IvfLists.read(spark, s"$gen/lists")
+    (tombstonesOpt(spark, gen) ++
+        alsoMasked.map(_.select(col("neighbor_id").cast("long"))))
+      .reduceOption(_ unionByName _)
+      .fold(lists)(m => lists.join(broadcast(m), Seq("neighbor_id"),
+        "left_anti"))
   }
 
   /** One micro-batch of streaming index maintenance — the foreachBatch
     * body behind [[graft.streaming.StreamingPqMaintenance]], completing
     * the four-family maintenance story (graph, IVF, token, IVF-PQ).
-    * The batch carries an `opCol` of 'add' / 'delete' rows: adds are
-    * encoded + routed under the FROZEN stored codebooks and appended
-    * behind a touched-cell replay guard (the
-    * [[IvfIndex.applyMaintenanceBatch]] anti-join — a redelivered batch
-    * appends exactly the missing rows, and the guard's scan reads only
-    * the probed `list=` partitions' neighbor_id column); deletes
-    * tombstone through [[delete]] (already replay-safe). A SAME-id
-    * delete+add is an UPDATE, sequenced delete →
-    * compact-inside-the-batch → append, with the whole-index-masked
-    * rebuild fallback (fold-to-empty is unreadable, so a batch that
-    * updates EVERY stored id rebuilds from its adds under the stored
-    * codebooks+model — assignments identical to an append's).
-    * `retain` passes through to compact/rebuild so a retention
-    * discipline survives maintenance. Single-writer, as everywhere.
+    * The batch carries an `opCol` of 'add' / 'delete' rows, classified
+    * by one aggregate: adds are encoded + routed ONCE under the FROZEN
+    * stored codebooks (model and centroids read once per call) and
+    * appended behind the touched-cell replay guard of
+    * [[IvfIndex.applyMaintenanceBatch]] (a redelivered batch appends
+    * exactly the missing rows); deletes tombstone through [[delete]]
+    * (already replay-safe).
+    *
+    * A SAME-id delete+add is an UPDATE, and an update batch commits ONE
+    * new generation from one partitioned write: the stored rows minus
+    * (pending tombstones ∪ the batch's deletes), plus the adds guarded
+    * against those survivors, with centroids and model CLONED as in
+    * [[compact]]. The generation is never empty — an update always
+    * keeps its add. `retain` passes through, and the previous
+    * generation is left untouched, so a rollback restores exactly the
+    * pre-batch probes. Single-writer, as everywhere.
     */
   def applyMaintenanceBatch(
       spark: SparkSession,
@@ -299,67 +303,34 @@ object PqIndex {
       opCol: String,
       maxRecordsPerFile: Long = 5000000L,
       retain: Int = 1): Unit = {
-    val adds = batch.filter(col(opCol) === "add")
-      .select(col(idCol), col(vecCol))
-      // An id twice in one batch must not land twice; deterministic
-      // vector choice (max), not arrival order.
-      .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
-    val dels = batch.filter(col(opCol) === "delete").select(col(idCol))
-    val upsert = !adds.join(dels, Seq(idCol), "left_semi").isEmpty
-    if (!dels.isEmpty) delete(spark, path, dels, idCol)
-    if (upsert) {
-      System.err.println("[graft] PqIndex.applyMaintenanceBatch: batch " +
-        "carries same-id delete+add (update) — deletes applied, " +
-        "compacting, then appending (one survivor rewrite per " +
-        "update-carrying batch)")
-      compact(spark, path, maxRecordsPerFile, retain)
-      if (tombstonesOpt(spark,
-          s"$path/${liveVersion(spark, path)}").isDefined) {
-        // Compact kept the mask: the batch masked EVERY stored row —
-        // rebuild from the adds under the stored codebooks+model (read
-        // eagerly: write() commits a new generation, then retires the
-        // one these frames read from).
-        System.err.println("[graft] PqIndex.applyMaintenanceBatch: the " +
-          "update batch masked every stored row — rebuilding from the " +
-          "batch's adds under the stored codebooks")
-        val live = liveVersion(spark, path)
-        val model = readModel(spark, s"$path/$live")
-        val cb = spark.read.parquet(s"$path/$live/centroids")
-          .select(col("centroid_id"), col("centroid"))
-          .localCheckpoint(eager = true)
-        write(spark, path, adds, idCol, vecCol, cb, model,
-          maxRecordsPerFile, retain)
-        Checkpoints.release(cb)
-        return
-      }
+    val shape = IvfLists.classify(batch, idCol, vecCol, opCol)
+    val counts = new IvfLists.GuardCounts(shape.adds)
+    val live = liveVersion(spark, path)
+    val gen = s"$path/$live"
+    // Adds encoded with the stored codebooks, in the stored column
+    // types, behind the replay guard over `stored`.
+    def fresh(stored: DataFrame): DataFrame = {
+      val adds = IvfLists.adds(batch, idCol, vecCol, opCol)
+        .select(col(idCol),
+          col(vecCol).cast(stored.schema("vec").dataType).as(vecCol))
+      IvfLists.guard(encodedLists(adds, idCol, vecCol,
+          storedCent(spark, gen), readModel(spark, gen)),
+        stored, wholeTree = false, counts)
     }
-    if (!adds.isEmpty) {
-      val live = liveVersion(spark, path)
-      val cent = spark.read.parquet(s"$path/$live/centroids").select(
-        col("centroid_id").as("__cid"), col("centroid").as("__cv"),
-        col("cnorm").as("__cn"))
-      val assigned = Similarity.invertedLists(adds, idCol, vecCol, cent)
-        .localCheckpoint(eager = true)
-      val touched = assigned.select(col("__list")).distinct()
-        .collect().map(_.get(0)).toSeq
-      if (touched.nonEmpty) {
-        val existing = spark.read.parquet(s"$path/$live/lists")
-          .filter(col("list").isin(touched: _*))
-          .select(col("neighbor_id"))
-        val dropped = assigned
-          .join(existing, Seq("neighbor_id"), "left_semi").count()
-        if (dropped > 0) System.err.println(
-          s"[graft] PqIndex.applyMaintenanceBatch: $dropped add(s) for " +
-            "already-live ids ignored (adds are not upserts; an update " +
-            "is a same-batch delete+add)")
-        val fresh = assigned
-          .join(existing, Seq("neighbor_id"), "left_anti")
-          .select(col("neighbor_id").as(idCol), col("__nv").as(vecCol))
-        if (!fresh.isEmpty)
-          append(spark, path, fresh, idCol, vecCol, maxRecordsPerFile)
-      }
-      Checkpoints.release(assigned)
+    if (shape.update) {
+      val kept = survivors(spark, gen,
+        Some(IvfLists.deletes(batch, idCol, opCol)))
+      commitLists(spark, path, live, kept.unionByName(fresh(kept)),
+        maxRecordsPerFile, retain)
+    } else {
+      if (shape.deletes)
+        delete(spark, path, IvfLists.deletes(batch, idCol, opCol),
+          "neighbor_id")
+      if (shape.adds > 0) IvfLists.write(
+        fresh(IvfLists.read(spark, s"$gen/lists")), s"$gen/lists",
+        "append", maxRecordsPerFile)
     }
+    counts.log("PqIndex")
   }
 
   /** Live tombstoned doc ids under a generation dir, None when never
@@ -370,7 +341,7 @@ object PqIndex {
     val p = new org.apache.hadoop.fs.Path(s"$gen/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(s"$gen/tombstones").select(col("neighbor_id")))
+      Some(IvfLists.read(spark, s"$gen/tombstones").select(col("neighbor_id")))
     else None
   }
 
@@ -383,23 +354,18 @@ object PqIndex {
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
-    val live = liveVersion(spark, path)
-    val batch0 = ids.select(col(idCol).cast("long").as("neighbor_id"))
+    val gen = s"$path/${liveVersion(spark, path)}"
+    val batch = ids.select(col(idCol).cast("long").as("neighbor_id"))
       .distinct()
-    val batch = (tombstonesOpt(spark, s"$path/$live") match {
-      case None => batch0
-      case Some(t) =>
-        batch0.join(broadcast(t.distinct()), Seq("neighbor_id"),
-          "left_anti")
-    }).localCheckpoint(eager = true)
-    val present = spark.read.parquet(s"$path/$live/lists")
-      .select(col("neighbor_id")).distinct()
-      .join(broadcast(batch), Seq("neighbor_id"), "left_semi")
+    val pending = tombstonesOpt(spark, gen).fold(batch)(t =>
+      batch.join(broadcast(t), Seq("neighbor_id"), "left_anti"))
+    val present = IvfLists.read(spark, s"$gen/lists")
+      .select(col("neighbor_id"))
+      .join(broadcast(pending), Seq("neighbor_id"), "left_semi")
+      .distinct()
       .localCheckpoint(eager = true)
     if (!present.isEmpty)
-      present.coalesce(1).write.mode("append")
-        .parquet(s"$path/$live/tombstones")
-    Checkpoints.release(batch)
+      present.coalesce(1).write.mode("append").parquet(s"$gen/tombstones")
     Checkpoints.release(present)
   }
 
@@ -412,11 +378,8 @@ object PqIndex {
   def compact(spark: SparkSession, path: String,
       maxRecordsPerFile: Long = 5000000L, retain: Int = 1): Unit = {
     val live = liveVersion(spark, path)
-    val tomb = tombstonesOpt(spark, s"$path/$live")
-      .flatMap(t => Checkpoints.eagerNonEmpty(t.distinct()))
-    if (tomb.isEmpty) return
-    val survivors = spark.read.parquet(s"$path/$live/lists")
-      .join(broadcast(tomb.get), Seq("neighbor_id"), "left_anti")
+    if (tombstonesOpt(spark, s"$path/$live").isEmpty) return
+    val kept = survivors(spark, s"$path/$live")
     // An ALL-TOMBSTONED index keeps its mask: committing a generation
     // whose lists dir holds zero rows would land `_GRAFT_COMMIT` over a
     // parquet tree with no data files, and every later [[topK]] read of
@@ -424,29 +387,32 @@ object PqIndex {
     // (UNABLE_TO_INFER_SCHEMA). The mask already hides everything, so
     // skipping the rewrite is probe-identical ([[IvfIndex.compact]] /
     // MaxSimIndex.readToks stance).
-    if (survivors.isEmpty) {
+    if (kept.isEmpty) {
       System.err.println(s"[graft] PqIndex.compact: every stored row " +
         s"under $path is tombstoned — keeping the mask instead of " +
         "committing an empty generation. This mask can never be folded " +
         "(every compact would re-hit this case): repopulate with a " +
         "rebuild (write), which clears it")
-      tomb.foreach(Checkpoints.release)
       return
     }
+    commitLists(spark, path, live, kept, maxRecordsPerFile, retain)
+  }
+
+  /** Commit `rows` (the stored list layout) as the next generation's
+    * lists, with the live generation's centroids and PQ model CLONED —
+    * deletes and updates must not move surviving codes. The one rewrite
+    * [[compact]] and an update batch share.
+    */
+  private def commitLists(spark: SparkSession, path: String, live: String,
+      rows: DataFrame, maxRecordsPerFile: Long, retain: Int): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     versions.commitNext(spark, path, retain) { gen =>
-      survivors
-        .repartition(col("list"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("list").parquet(s"$gen/lists")
+      IvfLists.write(rows, s"$gen/lists", "overwrite", maxRecordsPerFile)
       Seq("centroids", "model").foreach(t =>
         TreeClone.linkOrCopy(
           new org.apache.hadoop.fs.Path(s"$path/$live/$t"),
           new org.apache.hadoop.fs.Path(s"$gen/$t"), conf))
-    }
-    tomb.foreach(Checkpoints.release)
+    }: Unit
   }
 
   /** Probe the stored index — result-identical to
@@ -461,10 +427,8 @@ object PqIndex {
     require(candidateK >= k, "candidateK must be >= k")
     val live = liveVersion(spark, path)
     val model = readModel(spark, s"$path/$live")
-    val cent = spark.read.parquet(s"$path/$live/centroids")
-      .select(col("centroid_id").as("__cid"), col("centroid").as("__cv"),
-        col("cnorm").as("__cn"))
-    val stored = spark.read.parquet(s"$path/$live/lists")
+    val cent = storedCent(spark, s"$path/$live")
+    val stored = IvfLists.read(spark, s"$path/$live/lists")
     val tomb = tombstonesOpt(spark, s"$path/$live")
     // The pq_code column RIDES the routed candidate join (extra columns
     // on the lists frame survive ivfCandidates): the ADC stage scores
@@ -524,7 +488,7 @@ object PqIndex {
   }
 
   private[graft] def readModel(spark: SparkSession, gen: String): PqModel = {
-    val rows = spark.read.parquet(s"$gen/model")
+    val rows = IvfLists.read(spark, s"$gen/model")
       .select(col("sub"), col("scale"), col("cluster"), col("centroid"),
         col("dims"))
       .collect() // model-sized: m·k rows

@@ -27,19 +27,21 @@ import graft.ops.IvfIndex
   * index must exist ([[IvfIndex.write]]) before the stream starts; a
   * CROSS-batch delete is terminal until [[IvfIndex.compact]] folds its
   * tombstone (an add of a tombstoned id lands masked until then), while
-  * a SAME-batch delete+add is an update the batch op sequences itself
-  * (delete → compact → add — one survivor rewrite per update-carrying
-  * batch); appends accumulate small files per touched list, so run
-  * compact on the usual maintenance cadence — it is safe to do so
-  * between micro-batches (versioned `_SUCCESS` commit, readers and the
-  * next batch resolve the new tree).
+  * a SAME-batch delete+add is an update, and an update batch commits
+  * ONE new list tree from one partitioned write (survivors minus the
+  * batch's deletes, plus its guarded adds — no compact-then-append, no
+  * rebuild fallback), leaving one file per touched list and no
+  * tombstones; appends of update-free batches accumulate small files
+  * per touched list, so run compact on the usual maintenance cadence —
+  * it is safe to do so between micro-batches (versioned `_SUCCESS`
+  * commit, readers and the next batch resolve the new tree).
   */
 object StreamingIvfMaintenance {
 
   /** The foreachBatch body, exposed for direct (batch, id) application
     * in tests and manual backfills. `retain` passes through to the
-    * compact an update-carrying batch triggers, so a retention
-    * discipline on the tree survives maintenance.
+    * tree an update-carrying batch commits, so a retention discipline
+    * on the tree survives maintenance.
     */
   def writer(path: String, idCol: String, vecCol: String,
       opCol: String,

@@ -18,11 +18,12 @@ import graft.ops.PqIndex
   * [[PqIndex.applyMaintenanceBatch]]: adds are stored-model encoded,
   * stored-centroid routed, and appended behind a touched-cell replay
   * guard; deletes tombstone (replay-safe); a SAME-batch delete+add is
-  * an UPDATE sequenced delete → compact-inside-the-batch → append (one
-  * survivor rewrite per update-carrying batch — the pure-mask price),
-  * with the whole-index-masked rebuild fallback. Structured Streaming's
-  * at-least-once `foreachBatch` redelivery therefore converges to the
-  * single-delivery index.
+  * an UPDATE, and an update batch commits ONE new generation from one
+  * partitioned write (survivors minus the batch's deletes, plus its
+  * guarded adds, codebooks and model cloned) — no compact-then-append
+  * and no rebuild fallback, even when the batch re-embeds every stored
+  * row. Structured Streaming's at-least-once `foreachBatch` redelivery
+  * therefore converges to the single-delivery index.
   *
   * What maintenance does NOT do, stated honestly: the codebooks stay
   * frozen. Every append/update is EXACT under them, but a corpus that
