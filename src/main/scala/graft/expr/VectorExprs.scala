@@ -405,4 +405,16 @@ object VectorExprs {
   def planeProject(vec: Column, planes: Array[Array[Double]]): Column =
     GraftColumnBridge.column(
       PlaneProject(GraftColumnBridge.expression(vec), planes))
+
+  def nearestCentroid(vec: Column, books: Codebooks): Column =
+    GraftColumnBridge.column(
+      NearestCentroid(GraftColumnBridge.expression(vec), books))
+
+  def centroidDistances(vec: Column, books: Codebooks): Column =
+    GraftColumnBridge.column(
+      CentroidDistances(GraftColumnBridge.expression(vec), books))
+
+  def adcDistance(table: Column, code: Column): Column =
+    GraftColumnBridge.column(AdcDistance(
+      GraftColumnBridge.expression(table), GraftColumnBridge.expression(code)))
 }

@@ -30,18 +30,19 @@ import graft.ops.Dedup
   *
   * Scale shape: the model (k × dim longs) lives on the driver — the one
   * legitimately driver-sized object in the loop, same as any broadcast ML
-  * model. Per iteration: one MAP-ONLY assignment pass (k codegen'd
-  * [[graft.expr.VectorExprs.vecDot]] calls against literal centroids — no
-  * candidate join, no shuffle) and one partially-aggregated shuffle of
-  * k × dim slim rows for the centroid update. Nothing row-count-sized is
-  * ever collected; at 100 TB the quantized projection is the only thing
-  * that streams, and it streams once per iteration.
+  * model. Per iteration: one MAP-ONLY assignment pass (one
+  * [[graft.expr.NearestCentroid]] kernel per row holding the codebook by
+  * value — no candidate join, no shuffle, and one plan node whatever k)
+  * and one partially-aggregated shuffle of k × dim slim rows for the
+  * centroid update. Nothing row-count-sized is ever collected; at 100 TB
+  * the quantized projection is the only thing that streams, and it
+  * streams once per iteration.
   */
 object KMeans {
 
   /** Fitted model: `centroids(j)` is the milli-unit integer centroid of
-    * cluster `j`. Tiny (k × dim longs) — broadcast by value inside the
-    * assignment expressions.
+    * cluster `j`. Tiny (k × dim longs) — held by value inside the
+    * assignment kernel ([[books]]).
     */
   final case class KMeansModel(scale: Long, centroids: Array[Array[Long]]) {
     def k: Int = centroids.length
@@ -60,28 +61,22 @@ object KMeans {
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), quantize(col(vecCol), scale).as("__q"))
 
-  /** `|c|² − 2·x·c` per centroid — exact integers, so the argmin below is
-    * total-ordered with the (score, index) tiebreak.
+  /** `models` as one codebook kernel: model `s` scores the vector slice
+    * `[s·width, (s+1)·width)` (`width` 0: one model, the whole vector);
+    * `onGrid` for input [[quantize]]d already. Scores are `|c|² − 2·x·c`
+    * — exact integers, so the argmin is total-ordered with the (score,
+    * index) tiebreak: ties resolve to the LOWER centroid index.
     */
-  private def scores(q: Column, model: KMeansModel): Seq[Column] =
-    model.centroids.toSeq.map { c =>
-      val cLit = typedlit(c.map(_.toDouble).toSeq)
-      val c2 = c.map(v => v * v).sum
-      lit(c2.toDouble) - lit(2.0) * graft.expr.VectorExprs.vecDot(q, cLit)
-    }
+  private[graft] def books(models: Seq[KMeansModel], width: Int,
+      onGrid: Boolean): graft.expr.Codebooks =
+    new graft.expr.Codebooks(models.map(_.centroids).toArray,
+      models.map(_.scale).toArray, width, onGrid)
 
-  /** Cluster id (0-based) of the nearest centroid given the score array:
-    * first position of the minimum — ties resolve to the LOWER centroid
-    * index on every engine because `array_position` finds the first match.
-    */
-  private def clusterOf(scoreArr: Column): Column =
-    (array_position(scoreArr, array_min(scoreArr)) - 1).cast("int")
-
-  /** Materialize the per-row score array ONCE so cluster/dist derivations
-    * share it instead of re-evaluating k dot products each.
-    */
-  private def withScores(q: DataFrame, model: KMeansModel): DataFrame =
-    q.withColumn("__s", array(scores(col("__q"), model): _*))
+  /** Nearest cluster (0-based) of a quantized vector column. */
+  private def nearestOnGrid(q: Column, models: Seq[KMeansModel],
+      width: Int): Column =
+    graft.expr.VectorExprs.nearestCentroid(q, books(models, width, onGrid = true))
+      .getField("code")
 
   /** Fit `k` centroids with `iterations` Lloyd rounds.
     *
@@ -118,8 +113,8 @@ object KMeans {
     for (_ <- 1 to iterations) {
       // (cluster, pos)-keyed sums: partial aggregation collapses each map
       // task to ≤ k × dim rows before the shuffle; the collect is k × dim.
-      val updated = withScores(q, model)
-        .select(clusterOf(col("__s")).as("__c"),
+      val updated = q
+        .select(nearestOnGrid(col("__q"), Seq(model), 0)(0).as("__c"),
           posexplode(col("__q")).as(Seq("__pos", "__v")))
         .groupBy(col("__c"), col("__pos"))
         .agg(sum(col("__v")).as("__sum"), count(lit(1)).as("__n"))
@@ -172,11 +167,8 @@ object KMeans {
       }
       if (seedRows.isEmpty) return models // empty corpus: nothing to iterate
       for (_ <- 1 to iterations) {
-        val subClusters = array((0 until m).map { s =>
-          clusterOf(array(scores(
-            slice(col("__q"), s * subDim + 1, subDim), models(s)): _*))
-        }: _*)
-        val updated = q.withColumn("__cs", subClusters)
+        val updated = q
+          .withColumn("__cs", nearestOnGrid(col("__q"), models.toSeq, subDim))
           .select(col("__cs"), posexplode(col("__q")).as(Seq("__pos", "__v")))
           .select((col("__pos") / lit(subDim)).cast("int").as("__s"),
             pmod(col("__pos"), lit(subDim)).cast("int").as("__p"),
@@ -205,50 +197,23 @@ object KMeans {
     } finally q.unpersist(false)
   }
 
-  /** Assign every row to its nearest centroid. Map-only — the model rides
-    * into the plan as literals; no join, no shuffle.
+  /** Assign every row to its nearest centroid. Map-only — one
+    * [[graft.expr.NearestCentroid]] kernel holds the model by value and
+    * quantizes as it scores; no join, no shuffle.
     *
     * @return (idCol, cluster, dist) — `dist` is the exact squared L2
     *         distance on the quantized grid (BIGINT)
     */
   def assign(df: DataFrame, idCol: String, vecCol: String,
       model: KMeansModel): DataFrame = {
-    val q = quantized(df, idCol, vecCol, model.scale)
     if (model.k == 0) // degenerate fit (empty corpus): nothing to assign to
-      return q.filter(lit(false)).select(col("__id").as(idCol),
-        lit(0).as("cluster"), lit(0L).as("dist"))
-    val x2 = graft.expr.VectorExprs.vecDot(col("__q"), col("__q"))
-    withScores(q, model).select(
-      col("__id").as(idCol),
-      clusterOf(col("__s")).as("cluster"),
-      (x2 + array_min(col("__s"))).cast("long").as("dist"))
-  }
-
-  /** Per-centroid exact squared distances `|x − c_j|²` as an array column
-    * — the ADC "distance table" slice for one subspace
-    * ([[Pq.adcTopK]] computes this once per probe, then candidates cost
-    * one array lookup per subspace instead of a dot product).
-    */
-  def distanceArray(vec: Column, model: KMeansModel): Column = {
-    require(model.k > 0, "distanceArray needs a non-empty model")
-    val q = quantize(vec, model.scale)
-    val x2 = graft.expr.VectorExprs.vecDot(q, q)
-    array(scores(q, model).map(s => x2 + s): _*)
-  }
-
-  /** Single-expression `struct(cluster, dist)` assignment against a fitted
-    * model — lets callers fuse MANY codebooks into one map-only projection
-    * (product quantization fuses m of these over vector slices; whole-stage
-    * codegen's subexpression elimination shares the quantized array across
-    * the k score terms).
-    */
-  def assignment(vec: Column, model: KMeansModel): Column = {
-    require(model.k > 0, "assignment needs a non-empty model")
-    val q = quantize(vec, model.scale)
-    val s = array(scores(q, model): _*)
-    val x2 = graft.expr.VectorExprs.vecDot(q, q)
-    struct(clusterOf(s).as("cluster"),
-      (x2 + array_min(s)).cast("long").as("dist"))
+      return df.filter(lit(false))
+        .select(col(idCol), lit(0).as("cluster"), lit(0L).as("dist"))
+    df.filter(col(vecCol).isNotNull)
+      .select(col(idCol), graft.expr.VectorExprs.nearestCentroid(col(vecCol),
+        books(Seq(model), 0, onGrid = false)).as("__a"))
+      .select(col(idCol), col("__a.code")(0).as("cluster"),
+        col("__a.dist")(0).cast("long").as("dist"))
   }
 
   /** fit + assign in one call — the `q_kmeans` surface. */

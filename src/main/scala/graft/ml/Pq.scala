@@ -20,9 +20,10 @@ import graft.ml.KMeans.KMeansModel
   * Scale shape: `fit` runs m small k-means jobs (model state is m·k·(d/m)
   * longs on the driver — codebook-sized, like any broadcast model; at
   * 100 TB cache the input projection once since each subspace fit re-scans
-  * it). `encode` is ONE map-only projection: all m assignments ride as
-  * fused literal-centroid expressions — no join, no shuffle, no per-
-  * subspace pass.
+  * it). `encode` is ONE map-only projection: one
+  * [[graft.expr.NearestCentroid]] kernel holds all m codebooks by value
+  * and assigns every subspace in one call per row — no join, no shuffle,
+  * no per-subspace pass, and a plan whose size does not grow with m·k.
   */
 object Pq {
 
@@ -31,8 +32,15 @@ object Pq {
     def subDim: Int = dims / m
   }
 
-  private[graft] def subVec(vec: Column, s: Int, subDim: Int): Column =
-    slice(vec, s * subDim + 1, subDim)
+  /** Per subspace the nearest code and its squared distance —
+    * `STRUCT<code: ARRAY<INT>, dist: ARRAY<DOUBLE>>` — of a raw vector
+    * column (one kernel call per row).
+    */
+  private[graft] def nearest(vec: Column, model: PqModel): Column =
+    graft.expr.VectorExprs.nearestCentroid(vec, books(model))
+
+  private def books(model: PqModel): graft.expr.Codebooks =
+    KMeans.books(model.models.toSeq, model.subDim, onGrid = false)
 
   /** Fit per-subspace codebooks. `dims` must split evenly into `m`.
     * One fused Lloyd chain for all m subspaces ([[KMeans.fitSubspaces]]):
@@ -49,15 +57,10 @@ object Pq {
     */
   def encode(df: DataFrame, idCol: String, vecCol: String,
       model: PqModel): DataFrame = {
-    val asg = (0 until model.m).map { s =>
-      KMeans.assignment(subVec(col(vecCol), s, model.subDim), model.models(s))
-        .as(s"__a$s")
-    }
     df.filter(col(vecCol).isNotNull)
-      .select(col(idCol) +: asg: _*)
-      .select(col(idCol),
-        array((0 until model.m).map(s => col(s"__a$s.cluster")): _*).as("pq_code"),
-        (0 until model.m).map(s => col(s"__a$s.dist"))
+      .select(col(idCol), nearest(col(vecCol), model).as("__a"))
+      .select(col(idCol), col("__a.code").as("pq_code"),
+        (0 until model.m).map(s => col("__a.dist")(s).cast("long"))
           .reduce(_ + _).as("recon_dist"))
   }
 
@@ -124,8 +127,7 @@ object Pq {
       vecCol: String, model: PqModel, k: Int): DataFrame = {
     val p = probeTables(probes, idCol, vecCol, model)
     rankAdc(broadcast(p)
-      .crossJoin(codes.select(col(idCol).as("neighbor_id"), col("pq_code"))),
-      model, k)
+      .crossJoin(codes.select(col(idCol).as("neighbor_id"), col("pq_code"))), k)
   }
 
   /** [[adcTopK]] restricted to caller-supplied (query_id, neighbor_id)
@@ -140,8 +142,7 @@ object Pq {
     rankAdc(candPairs.select(col("query_id"), col("neighbor_id"))
       .join(codes.select(col(idCol).as("neighbor_id"), col("pq_code")),
         Seq("neighbor_id"))
-      .join(broadcast(p), Seq("query_id")),
-      model, k)
+      .join(broadcast(p), Seq("query_id")), k)
   }
 
   /** [[adcTopKWithin]] for candidate pairs that ALREADY CARRY their
@@ -155,16 +156,15 @@ object Pq {
     val p = probeTables(probes, idCol, vecCol, model)
     rankAdc(codedPairs
       .select(col("query_id"), col("neighbor_id"), col("pq_code"))
-      .join(broadcast(p), Seq("query_id")),
-      model, k)
+      .join(broadcast(p), Seq("query_id")), k)
   }
 
-  /** Per-probe m×k distance tables: (query_id, __tab). */
+  /** Per-probe m×k distance tables `|p_s − c_j|²`: (query_id, __tab) —
+    * one [[graft.expr.CentroidDistances]] kernel call per probe.
+    */
   private def probeTables(probes: DataFrame, idCol: String, vecCol: String,
       model: PqModel): DataFrame = {
-    val tab = array((0 until model.m).map(s =>
-      KMeans.distanceArray(subVec(col(vecCol), s, model.subDim),
-        model.models(s))): _*)
+    val tab = graft.expr.VectorExprs.centroidDistances(col(vecCol), books(model))
     probes.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), tab.as("__tab"))
   }
@@ -172,15 +172,13 @@ object Pq {
   /** ADC lookup + per-query rank over (query_id, neighbor_id, __tab,
     * pq_code) pair rows.
     */
-  private def rankAdc(pairs: DataFrame, model: PqModel, k: Int): DataFrame = {
+  private def rankAdc(pairs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val scored = pairs
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (0 until model.m).map(s =>
-          element_at(element_at(col("__tab"), s + 1),
-            element_at(col("pq_code"), s + 1) + 1))
-          .reduce(_ + _).cast("long").as("adc_dist"))
+        graft.expr.VectorExprs.adcDistance(col("__tab"),
+          col("pq_code").cast("array<int>")).cast("long").as("adc_dist"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Observation}
 
 /** Explicit lifecycle for `localCheckpoint` blocks.
   *
@@ -63,5 +63,22 @@ object Checkpoints {
   def eagerNonEmpty(df: DataFrame): Option[DataFrame] = {
     val c = df.localCheckpoint(eager = true)
     if (c.isEmpty) { release(c); None } else Some(c)
+  }
+
+  /** Eagerly checkpoint `df` and count on the pass that writes the
+    * checkpoint: each of `counts` (a `count(...)` aggregate) is observed
+    * with no extra Spark job. The counts travel the listener bus, so
+    * they are waited for, bounded: `None` when they do not arrive. An
+    * observed row without values means adaptive execution dropped the
+    * observed subtree as empty, so every count is 0.
+    */
+  def eagerCounted(df: DataFrame, counts: Column*): (DataFrame, Option[Seq[Long]]) = {
+    val seen = Observation()
+    val c = df.observe(seen, counts.head, counts.tail: _*)
+      .localCheckpoint(eager = true)
+    val r = scala.util.Try(scala.concurrent.Await.result(seen.future,
+      scala.concurrent.duration.Duration(5, "s"))).toOption
+    (c, r.map(row => counts.indices.map(i =>
+      if (row.length == 0) 0L else row.getLong(i))))
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, SparkPlan,
+  UnionExec}
 
 /** Round-robin fan-out for a frame about to enter CPU-heavy NARROW work
   * (guide §2.5 "input skew": one huge unsplittable input → repartition
@@ -22,13 +25,31 @@ import org.apache.spark.sql.DataFrame
   *
   * Identity when the input already plans >= defaultParallelism
   * partitions (the production case — many files / row groups), so no
-  * exchange is added at scale; the `.rdd` partition probe costs one
-  * physical-plan construction, acceptable at a handful of call sites.
+  * exchange is added at scale. The width is read off the physical plan
+  * before execution (`queryExecution.sparkPlan`): the leaf scans' planned
+  * splits through narrow operators. Nothing runs — building the frame's
+  * RDD instead would execute its exchange stages under adaptive
+  * execution. An input that needs an exchange of its own, or whose
+  * leaves cannot be sized, fans out.
   */
 object FanOut {
 
   def apply(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    val width = scala.util.Try(planned(df.queryExecution.sparkPlan)).getOrElse(0)
+    if (width < target) df.repartition(target) else df
+  }
+
+  /** Tasks `plan` runs with: its leaves' partitions through operators
+    * that need no redistribution; 0 past any other operator.
+    */
+  private def planned(plan: SparkPlan): Int = plan match {
+    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    case l: LeafExecNode => l.execute().getNumPartitions
+    case u: UnionExec => u.children.map(planned).sum
+    case p if p.children.size == 1 &&
+        p.requiredChildDistribution.forall(_ == UnspecifiedDistribution) =>
+      planned(p.children.head)
+    case _ => 0
   }
 }

@@ -230,23 +230,22 @@ object GraphIndex {
     // ONE materialization answers "which adds are fresh", "how many were
     // dropped" and "is anything fresh at all": the left join against the
     // stored ids is eager-checkpointed (batch-sized — adds are unique by
-    // the groupBy), and the dropped count / fresh split / emptiness test
-    // all read its blocks. The previous shape ran the stored-subtree
-    // THREE times (anti-join, semi-join count, isEmpty) — three full
-    // jobs where one suffices (guide §1.2: fewer passes; these lifecycle
-    // chains are driver-bound on job count, not on bytes).
-    val marked = adds.join(
-        stored.select(col("id"), lit(true).as("__stored")), Seq("id"),
-        "left")
-      .localCheckpoint(eager = true)
+    // the groupBy), the fresh split reads its blocks, and both counts are
+    // observed on the checkpoint's own pass — no job beyond it (guide
+    // §1.2: fewer passes; these lifecycle chains are driver-bound on job
+    // count, not on bytes). Counts that never arrive leave the log out
+    // and the emptiness test to one job.
+    val (marked, counts) = Checkpoints.eagerCounted(
+      adds.join(stored.select(col("id"), lit(true).as("__stored")),
+        Seq("id"), "left"),
+      count(col("__stored")), count(when(col("__stored").isNull, 1)))
     val fresh = marked.filter(col("__stored").isNull)
       .select(col("id"), col("vec"))
-    val dropped = marked.filter(col("__stored").isNotNull).count()
-    if (dropped > 0) System.err.println(
+    counts.map(_.head).filter(_ > 0).foreach(dropped => System.err.println(
       s"[graft] GraphIndex.applyMaintenanceBatch: $dropped add(s) for " +
         "already-stored ids ignored (adds are not upserts; an update is " +
-        "delete then add — the delete folds on the next batch)")
-    val freshEmpty = fresh.isEmpty
+        "delete then add — the delete folds on the next batch)"))
+    val freshEmpty = counts.fold(fresh.isEmpty)(_(1) == 0)
     if (freshEmpty && tomb.isEmpty) { // replay no-op, nothing to fold
       Checkpoints.release(stored)
       Checkpoints.release(marked)

@@ -201,16 +201,17 @@ object MaxSimIndex {
     // keys among the batch's ids, batch side broadcast — a replayed or
     // torn-then-redelivered batch appends exactly the missing rows.
     // Bucket assignment is deterministic, so a same-key row is always a
-    // replay (a re-embedded document is a rebuild).
-    val stored = readToks(spark, s"$path/$live/toks")
-      .select(col("t"), col("id"), col("pos"))
-      .join(broadcast(rows.select(col("id")).distinct()), Seq("id"),
-        "left_semi")
-      .localCheckpoint(eager = true)
-    val dropped = stored.count()
-    if (dropped > 0) System.err.println(
+    // replay (a re-embedded document is a rebuild). The log's count is
+    // observed on the checkpoint's own pass (no count job).
+    val (stored, counts) = Checkpoints.eagerCounted(
+      readToks(spark, s"$path/$live/toks")
+        .select(col("t"), col("id"), col("pos"))
+        .join(broadcast(rows.select(col("id")).distinct()), Seq("id"),
+          "left_semi"),
+      count(lit(1)))
+    counts.map(_.head).filter(_ > 0).foreach(dropped => System.err.println(
       s"[graft] MaxSimIndex.append: $dropped already-stored token row(s) " +
-        "skipped (replay or torn-append heal; an update is a rebuild)")
+        "skipped (replay or torn-append heal; an update is a rebuild)"))
     rows.join(broadcast(stored), Seq("t", "id", "pos"), "left_anti")
       .repartitionByRange(col("t"), col("b"), col("id"))
       .sortWithinPartitions(col("b"), col("id"), col("pos"))

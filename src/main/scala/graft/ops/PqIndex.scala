@@ -100,31 +100,22 @@ object PqIndex {
 
   /** Routed + PQ-encoded rows in ONE corpus pass: the inverted-lists
     * frame already carries each row's full vector (`__nv`), and the PQ
-    * code is a map-only projection of that same vector — so encoding
-    * INSIDE the lists frame produces bit-identical codes to a separate
-    * [[Pq.encode]] pass without the second corpus scan or the
-    * neighbor_id join that re-shuffled both sides to stitch them back
-    * together (guide §2.4: remove shuffles outright). At corpus scale
+    * code is one codebook-kernel call on that same vector
+    * ([[Pq.nearest]]) — so encoding INSIDE the lists frame produces
+    * bit-identical codes to a separate [[Pq.encode]] pass without the
+    * second corpus scan or the neighbor_id join that re-shuffled both
+    * sides to stitch them back together (guide §2.4: remove shuffles
+    * outright). At corpus scale
     * this turns the build from (2 scans, 3 exchanges, 1 join) into
     * (1 scan, 2 exchanges: the argmax assignment and the cell-keyed
     * write placement).
     */
   private def encodedLists(corpus: DataFrame, idCol: String,
-      vecCol: String, cent: DataFrame, model: PqModel): DataFrame = {
-    val lists = Similarity.invertedLists(corpus, idCol, vecCol, cent)
-    val asg = (0 until model.m).map { s =>
-      graft.ml.KMeans.assignment(
-        Pq.subVec(col("__nv"), s, model.subDim), model.models(s))
-        .as(s"__a$s")
-    }
-    lists
-      .select(col("__list") +: col("neighbor_id") +: col("__nv") +:
-        col("__nn") +: asg: _*)
+      vecCol: String, cent: DataFrame, model: PqModel): DataFrame =
+    Similarity.invertedLists(corpus, idCol, vecCol, cent)
       .select(col("__list").as("list"), col("neighbor_id"),
-        array((0 until model.m).map(s => col(s"__a$s.cluster")): _*)
-          .as("pq_code"),
+        Pq.nearest(col("__nv"), model).getField("code").as("pq_code"),
         col("__nv").as("vec"), col("__nn").as("vnorm"))
-  }
 
   /** Build + commit a generation. `centroids` is the coarse codebook as
     * (centroid_id, centroid) — pass the same frame the inline path

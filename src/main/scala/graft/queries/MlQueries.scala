@@ -58,8 +58,9 @@ object MlQueries extends QueryGroup {
 
     // Lloyd's k-means, k=8, 3 rounds, integer milli-unit arithmetic: seeds
     // are the 8 smallest md5(vec_id) rows, assignment is an argmin over 8
-    // codegen'd literal-centroid dot products (map-only), each update is
-    // one (cluster,pos)-keyed partial-agg'd shuffle of k×64 slim rows.
+    // centroid scores in one codebook-kernel call per row (map-only), each
+    // update is one (cluster,pos)-keyed partial-agg'd shuffle of k×64 slim
+    // rows.
     // Exact integers end to end → bit-identical to the unrolled oracle.
     "q_kmeans" -> ((s, dir) =>
       KMeans.fitAssign(Tables.embeddings(s, dir), "vec_id", "embedding",

@@ -73,6 +73,41 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(!plan.contains("Join"), plan)
   }
 
+  /** Expression nodes of the optimized plan, subqueries included — built
+    * with `executePlan`, never run.
+    */
+  private def expressionNodes(df: org.apache.spark.sql.DataFrame): Int =
+    spark.sessionState.executePlan(df.queryExecution.logical).optimizedPlan
+      .collectWithSubqueries { case p =>
+        p.expressions.map(_.collect { case e => e }.size).sum
+      }.sum
+
+  test("codebook kernel: k-means and PQ plans do not grow with k") {
+    import spark.implicits._
+    import graft.ml.KMeans.KMeansModel
+    val dims = 8
+    val df = (0L until 32L).map(i =>
+      (i, Array.tabulate(dims)(d => ((i * 7 + d) % 5).toDouble)))
+      .toDF("vec_id", "embedding")
+    val cent = df.filter(col("vec_id") % 8 === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+    def book(k: Int, width: Int, s: Int) = KMeansModel(1000L,
+      Array.tabulate(k)(j => Array.tabulate(width)(d => (j * 31L + d * 7 + s) % 997)))
+    def nodes(k: Int): Seq[Int] = {
+      val pq = graft.ml.Pq.PqModel(dims, Array.tabulate(2)(s => book(k, dims / 2, s)))
+      val path = java.nio.file.Files.createTempDirectory("pq_plan").toString
+      graft.ops.PqIndex.write(spark, path, df, "vec_id", "embedding", cent, pq)
+      Seq(expressionNodes(graft.ml.Pq.encode(df, "vec_id", "embedding", pq)),
+        expressionNodes(graft.ml.KMeans.assign(df, "vec_id", "embedding",
+          book(k, dims, 0))),
+        expressionNodes(graft.ops.PqIndex.topK(spark, path,
+          df.filter(col("vec_id") < 4), "vec_id", "embedding", k = 3,
+          candidateK = 6)))
+    }
+    val (small, large) = (nodes(16), nodes(256))
+    assert(small == large, s"k = 16: $small, k = 256: $large")
+  }
+
   test("PQ ADC search: probe side broadcast, corpus never carries vectors") {
     import spark.implicits._
     val df = (0L until 40L).map(i =>
