@@ -3,6 +3,7 @@ package graft
 import java.time.ZonedDateTime
 
 import graft.enrich.Enrichment
+import graft.ops.Par
 import graft.parse.{OsrsPatterns, ParseConfig, ParseEngine, ValueOverride}
 import graft.reports._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -101,8 +102,11 @@ object OsrsPipeline {
       case _ => None
     }
 
-  /** The enriched silver frames every report reads, both cached. The
-    * caller owns the caches: [[Silver.unpersist]] releases them.
+  /** The enriched silver frames every report reads, both cached and
+    * already materialized, so concurrent readers (the table writes of
+    * [[graft.gold.GoldSink.publish]]) share the loaded buffers instead of
+    * racing to build them. The caller owns the caches:
+    * [[Silver.unpersist]] releases them.
     */
   case class Silver(broadcasts: DataFrame, chat: DataFrame) {
     def unpersist(): Unit = { broadcasts.unpersist(); chat.unpersist() }
@@ -110,7 +114,8 @@ object OsrsPipeline {
 
   /** Silver step: raw frame (id, timestamp, raw_content) → parsed and
     * enriched broadcasts and chat. `itemPrices` feeds the as-of value
-    * override (empty frame = constants only).
+    * override (empty frame = constants only). Both caches are loaded
+    * before this returns, one concurrent job each.
     */
   def silver(
       raw: DataFrame,
@@ -128,8 +133,11 @@ object OsrsPipeline {
       parsed.chat, config.mappingRules, Seq("Username"))
 
     // Every report reads these two frames — cache once, like the
-    // reference's in-memory pandas frames, but spill-safe.
-    Silver(broadcasts.cache(), chat.cache())
+    // reference's in-memory pandas frames, but spill-safe — and load both
+    // now, so reports written concurrently read a materialized cache.
+    val (b, c) = (broadcasts.cache(), chat.cache())
+    Par.jobs(() => b.count(), () => c.count())
+    Silver(b, c)
   }
 
   /** Reports step: silver → map of gold tables, each a lazy DAG over it. */

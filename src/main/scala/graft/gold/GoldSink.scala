@@ -2,6 +2,7 @@ package graft.gold
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.ops.Par
 import org.apache.spark.sql.DataFrame
 
 /** Blue/green gold sink (`/root/reference/src/3_transform_data.py:771-798`,
@@ -14,6 +15,14 @@ import org.apache.spark.sql.DataFrame
   * is the same contract without mtime races. On a table format with
   * snapshot isolation this whole class collapses into `overwrite` — kept
   * explicit here because the environment is plain parquet directories.
+  *
+  * A publish writes its tables concurrently, one driver thread per table
+  * ([[graft.ops.Par.jobs]]): each write is driver-bound (analysis,
+  * planning, AQE) over a handful of small tasks, so overlapping them lets
+  * one table's planning run while another's tasks execute. The caller
+  * must hand over tables whose shared upstream is already materialized
+  * (an eagerly loaded cache or checkpoint, as [[graft.OsrsPipeline.silver]]
+  * returns); tables over one lazy cache would race to build it.
   */
 class GoldSink(rootDir: String) {
 
@@ -31,6 +40,12 @@ class GoldSink(rootDir: String) {
 
   /** Rebuild the standby slot with the given tables, then swap. Returns the
     * directory that now holds the live gold layer.
+    *
+    * Every table is written at once, each from its own thread. The pointer
+    * swaps only after every write has landed. The first failed write
+    * cancels the others and is rethrown (later failures suppressed onto
+    * it); the pointer then still names the previous slot, whose tables
+    * stay live, and the next publish clears the half-written standby.
     */
   def publish(tables: Map[String, DataFrame]): String = {
     val target = standbySlot
@@ -47,9 +62,9 @@ class GoldSink(rootDir: String) {
         .foreach(p => Files.deleteIfExists(p))
     }
     Files.createDirectories(targetDir)
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(targetDir.resolve(name).toString)
-    }
+    Par.jobs(tables.toSeq.map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(targetDir.resolve(name).toString)
+    }: _*)
     val tmp = Paths.get(rootDir, "current.tmp")
     Files.writeString(tmp, target)
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,

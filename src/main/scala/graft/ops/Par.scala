@@ -20,6 +20,12 @@ import org.apache.spark.SparkContext
   * are joined before returning, and the first failure is rethrown with
   * the later ones suppressed — a caller's commit marker lands strictly
   * after every tree landed, or not at all.
+  *
+  * Call sites: the tree writes of a Graph/Pq/Ivf commit, and
+  * [[graft.gold.GoldSink.publish]], which writes every table of a gold
+  * set from its own thread before the pointer swap. Thread `graft-par-i`
+  * runs the i-th thunk, so JFR, jstack and driver logs can attribute the
+  * concurrent driver work.
   */
 object Par {
 
@@ -29,7 +35,7 @@ object Par {
     val group = s"graft-par-${java.util.UUID.randomUUID()}"
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val ts = thunks.map { t =>
+    val ts = thunks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(() => {
         sc.setJobGroup(group, "graft.ops.Par")
         try t() catch {
@@ -38,7 +44,7 @@ object Par {
             if (failed.compareAndSet(false, true))
               sc.cancelJobGroupAndFutureJobs(group)
         }
-      })
+      }, s"graft-par-$i")
       th.setDaemon(true)
       th.start()
       th

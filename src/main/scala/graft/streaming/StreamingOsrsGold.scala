@@ -63,8 +63,11 @@ class StreamingOsrsGold(
     * state last and overwrite the newer published gold until the next
     * trigger.
     *
-    * The rebuild's silver caches are released once the publish returns,
-    * so a long-lived session holds no cached relation between batches.
+    * The rebuild materializes its silver caches once
+    * ([[OsrsPipeline.silver]]), then publishes every table concurrently,
+    * one driver thread per table ([[GoldSink.publish]]). The caches are
+    * released once the publish returns or fails, so a long-lived session
+    * holds no cached relation between batches.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit =
     rawStore.withWriteLock {

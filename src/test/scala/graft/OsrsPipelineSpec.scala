@@ -148,4 +148,21 @@ class OsrsPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(kv("label_ytd") == "Year-to-Date (2024)")
     assert(gold("run_metadata").head.getString(0).startsWith("2024-02-05T12:00"))
   }
+
+  test("silver returns both frames cached and already loaded") {
+    import org.apache.spark.sql.classic
+    import spark.implicits._
+    // A prefix of the fixture: the plans differ from `gold`'s silver, so
+    // neither cache entry is shared with (or released from) the other tests.
+    val s = OsrsPipeline.silver(raw.take(12).toDF("id", "timestamp", "raw_content"), config)
+    try {
+      val cacheManager = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+      for ((name, df) <- Seq("broadcasts" -> s.broadcasts, "chat" -> s.chat)) {
+        val cached = cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+        assert(cached.isDefined, s"$name is not cached")
+        assert(cached.get.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded,
+          s"$name is cached but not loaded")
+      }
+    } finally s.unpersist()
+  }
 }

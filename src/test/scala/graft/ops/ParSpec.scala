@@ -35,4 +35,10 @@ class ParSpec extends AnyFunSuite with SparkTestBase {
     // The session still runs jobs afterwards (only the group was cancelled).
     assert(spark.range(10).count() == 10L)
   }
+
+  test("each thunk runs on a thread named after its index") {
+    val names = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    Par.jobs((0 until 3).map(i => () => { names.put(i, Thread.currentThread.getName); () }): _*)
+    assert((0 until 3).map(names.get) == Seq("graft-par-0", "graft-par-1", "graft-par-2"))
+  }
 }

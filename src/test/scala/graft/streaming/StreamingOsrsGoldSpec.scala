@@ -97,11 +97,13 @@ class StreamingOsrsGoldSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_sosrs3").toString
     val gold = new StreamingOsrsGold(root, runTime)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // Ids, not a count: the ContextCleaner may drop RDDs an earlier suite
+    // leaked mid-test. Every RDD the batches persisted must be gone.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     Seq(batch1, batch2, batch1).zipWithIndex.foreach { case (rows, i) =>
       gold.applyBatch(rows.toDF("id", "timestamp", "raw_content"), i.toLong)
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     assert(gold.rawStore.read(spark).get.count() == 7L)
   }
 }
