@@ -111,29 +111,20 @@ object GraphIndex {
   def rollback(spark: SparkSession, path: String): Unit =
     versions.rollback(spark, path): Unit
 
+  private def liveGen(spark: SparkSession, path: String): String =
+    s"$path/${liveVersion(spark, path)}"
+
   private def rawNodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/${liveVersion(spark, path)}/nodes")
+    spark.read.parquet(s"${liveGen(spark, path)}/nodes")
 
   private def rawEdges(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/${liveVersion(spark, path)}/edges")
-
-  /** Live tombstoned ids under the live generation, None when the dir
-    * was never written. Tiny by the compaction-bounded assumption (the
-    * IVF stance) — consumers broadcast it.
-    */
-  private def tombstonesOpt(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = s"$path/${liveVersion(spark, path)}/tombstones"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir).select(col("id")))
-    else None
-  }
+    spark.read.parquet(s"${liveGen(spark, path)}/edges")
 
   /** Live node vectors, deleted ids masked out. */
   def nodes(spark: SparkSession, path: String): DataFrame = {
     val raw = rawNodes(spark, path)
-    tombstonesOpt(spark, path) match {
+    VersionedTree.tombstones(spark, liveGen(spark, path))
+      .map(_.select(col("id"))) match {
       case None => raw
       case Some(t) => raw.join(broadcast(t), Seq("id"), "left_anti")
     }
@@ -147,7 +138,8 @@ object GraphIndex {
     */
   def edges(spark: SparkSession, path: String): DataFrame = {
     val raw = rawEdges(spark, path)
-    tombstonesOpt(spark, path) match {
+    VersionedTree.tombstones(spark, liveGen(spark, path))
+      .map(_.select(col("id"))) match {
       case None => raw
       case Some(t) =>
         raw.join(broadcast(t), Seq("id"), "left_anti")
@@ -165,7 +157,8 @@ object GraphIndex {
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
     val live = liveVersion(spark, path)
-    val notYetTombed = tombstonesOpt(spark, path) match {
+    val notYetTombed = VersionedTree.tombstones(spark, s"$path/$live")
+      .map(_.select(col("id"))) match {
       case None => ids.select(col(idCol).cast("long").as("id")).distinct()
       case Some(t) => ids.select(col(idCol).cast("long").as("id"))
         .distinct()
@@ -219,7 +212,8 @@ object GraphIndex {
     // A zero-row tombstone file never lands today (delete only writes
     // non-empty batches), but the eagerNonEmpty helper releases the
     // checkpoint before discarding an empty frame if one ever does.
-    val tomb = tombstonesOpt(spark, path)
+    val tomb = VersionedTree.tombstones(spark, liveGen(spark, path))
+      .map(_.select(col("id")))
       .flatMap(t => Checkpoints.eagerNonEmpty(t.distinct()))
     val stored = nodes(spark, path).localCheckpoint(eager = false)
     val adds = batch.filter(col(vecCol).isNotNull)

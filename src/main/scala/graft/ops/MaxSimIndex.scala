@@ -219,18 +219,6 @@ object MaxSimIndex {
     Checkpoints.release(stored)
   }
 
-  /** Live tombstoned doc ids under a generation dir, None when never
-    * written. Tiny by the compaction-bounded assumption — broadcast.
-    */
-  private def tombstonesOpt(spark: SparkSession,
-      gen: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$gen/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.parquet(s"$gen/tombstones").select(col("id")))
-    else None
-  }
-
   /** Tombstone a batch of doc ids (see the object doc). Replay-safe:
     * only currently-stored ids land, so a redelivered delete (or a
     * delete of a never-stored id) appends nothing.
@@ -240,7 +228,8 @@ object MaxSimIndex {
     requireLongIds(ids, idCol, "delete")
     val live = liveVersion(spark, path)
     val batch0 = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val batch = (tombstonesOpt(spark, s"$path/$live") match {
+    val batch = (VersionedTree.tombstones(spark, s"$path/$live")
+      .map(_.select(col("id"))) match {
       case None => batch0
       case Some(t) =>
         batch0.join(broadcast(t.distinct()), Seq("id"), "left_anti")
@@ -264,7 +253,8 @@ object MaxSimIndex {
   def compact(spark: SparkSession, path: String, retain: Int = 1): Unit = {
     val live = liveVersion(spark, path)
     val m = readMeta(spark, s"$path/$live")
-    val tomb = tombstonesOpt(spark, s"$path/$live")
+    val tomb = VersionedTree.tombstones(spark, s"$path/$live")
+      .map(_.select(col("id")))
       .flatMap(t => Checkpoints.eagerNonEmpty(t.distinct()))
     if (tomb.isEmpty) return
     versions.commitNext(spark, path, retain) { gen =>
@@ -290,7 +280,8 @@ object MaxSimIndex {
     val live = liveVersion(spark, path)
     val m = readMeta(spark, s"$path/$live")
     val toksRaw = readToks(spark, s"$path/$live/toks")
-    val toks = tombstonesOpt(spark, s"$path/$live") match {
+    val toks = VersionedTree.tombstones(spark, s"$path/$live")
+      .map(_.select(col("id"))) match {
       case None => toksRaw
       case Some(t) =>
         toksRaw.join(broadcast(t.distinct()), Seq("id"), "left_anti")

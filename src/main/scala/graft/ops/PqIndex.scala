@@ -258,7 +258,8 @@ object PqIndex {
   private def survivors(spark: SparkSession, gen: String,
       alsoMasked: Option[DataFrame] = None): DataFrame = {
     val lists = IvfLists.read(spark, s"$gen/lists")
-    (tombstonesOpt(spark, gen) ++
+    (VersionedTree.tombstones(spark, gen)
+        .map(_.select(col("neighbor_id"))) ++
         alsoMasked.map(_.select(col("neighbor_id").cast("long"))))
       .reduceOption(_ unionByName _)
       .fold(lists)(m => lists.join(broadcast(m), Seq("neighbor_id"),
@@ -324,18 +325,6 @@ object PqIndex {
     counts.log("PqIndex")
   }
 
-  /** Live tombstoned doc ids under a generation dir, None when never
-    * written. Tiny by the compaction-bounded assumption — broadcast.
-    */
-  private def tombstonesOpt(spark: SparkSession,
-      gen: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$gen/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(IvfLists.read(spark, s"$gen/tombstones").select(col("neighbor_id")))
-    else None
-  }
-
   /** Tombstone a batch of stored ids (see the object doc). Replay-safe:
     * only currently-stored, not-yet-tombstoned ids land, so a
     * redelivered delete (or a delete of a never-stored id) appends
@@ -348,8 +337,9 @@ object PqIndex {
     val gen = s"$path/${liveVersion(spark, path)}"
     val batch = ids.select(col(idCol).cast("long").as("neighbor_id"))
       .distinct()
-    val pending = tombstonesOpt(spark, gen).fold(batch)(t =>
-      batch.join(broadcast(t), Seq("neighbor_id"), "left_anti"))
+    val pending = VersionedTree.tombstones(spark, gen).fold(batch)(t =>
+      batch.join(broadcast(t.select(col("neighbor_id"))), Seq("neighbor_id"),
+        "left_anti"))
     val present = IvfLists.read(spark, s"$gen/lists")
       .select(col("neighbor_id"))
       .join(broadcast(pending), Seq("neighbor_id"), "left_semi")
@@ -369,7 +359,7 @@ object PqIndex {
   def compact(spark: SparkSession, path: String,
       maxRecordsPerFile: Long = 5000000L, retain: Int = 1): Unit = {
     val live = liveVersion(spark, path)
-    if (tombstonesOpt(spark, s"$path/$live").isEmpty) return
+    if (VersionedTree.tombstones(spark, s"$path/$live").isEmpty) return
     val kept = survivors(spark, s"$path/$live")
     // An ALL-TOMBSTONED index keeps its mask: committing a generation
     // whose lists dir holds zero rows would land `_GRAFT_COMMIT` over a
@@ -420,7 +410,8 @@ object PqIndex {
     val model = readModel(spark, s"$path/$live")
     val cent = storedCent(spark, s"$path/$live")
     val stored = IvfLists.read(spark, s"$path/$live/lists")
-    val tomb = tombstonesOpt(spark, s"$path/$live")
+    val tomb = VersionedTree.tombstones(spark, s"$path/$live")
+      .map(_.select(col("neighbor_id")))
     // The pq_code column RIDES the routed candidate join (extra columns
     // on the lists frame survive ivfCandidates): the ADC stage scores
     // codes read off this same partition-pruned scan instead of

@@ -92,15 +92,6 @@ object TimeSeries {
       .withColumn("Frequency", lit(freqLabel))
   }
 
-  /** Stack multiple frequencies, as the reference's timeseries reports do. */
-  def multiFrequency(
-      events: DataFrame,
-      tsCol: String,
-      valueCol: String,
-      freqs: Seq[(String, Long)]): DataFrame =
-    freqs.map { case (label, secs) => resample(events, tsCol, valueCol, secs, label) }
-      .reduce(_.unionByName(_))
-
   /** Linear interpolation of a sparse daily series over its gap-free date
     * spine — the sensor/metric gap-fill primitive (missing days get the
     * straight line between the nearest observations; edges forward/back

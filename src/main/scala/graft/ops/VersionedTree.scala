@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Recursive tree clone for index-generation BRANCHING: hard-links
   * files when source and destination live on the local filesystem and
@@ -62,8 +62,13 @@ private[ops] object TreeClone {
   * generation landed, readers resolve the highest COMMITTED version, and
   * a crash mid-write leaves the previous generation live with the torn
   * one as skipped-past garbage (numbered past, never resurrected).
-  * Shared by [[GraphIndex]] (nodes + edges per generation) and
-  * [[MaxSimIndex]] (token tree + meta per generation).
+  * The one generation lifecycle of the four persisted index families:
+  * [[IvfIndex]] (`ivf_v{n}`: centroids + lists), [[PqIndex]]
+  * (`pq_v{n}`: centroids + lists + model), [[GraphIndex]]
+  * (`graph_v{n}`: nodes + edges) and [[MaxSimIndex]] (`tokens_v{n}`:
+  * token tree + meta). Each family's pending deletes live in its
+  * generation's `tombstones/` tree, read through
+  * [[VersionedTree.tombstones]].
   *
   * Single-writer assumption, like every maintenance op here.
   */
@@ -143,7 +148,7 @@ private[ops] final class VersionedTree(prefix: String) {
     * into the retired slot (maxVersion no longer sees it), so a reader
     * that resolved the old generation name before the rollback could
     * pair it with the recommitted tree's content — the same
-    * resolve-then-read grace-period caveat as [[IvfIndex.compact]]'s
+    * resolve-then-read grace-period caveat as a compaction's
     * retirement; the single-writer owns sequencing rollbacks against
     * in-flight probes, exactly as with rebuilds.
     */
@@ -190,5 +195,21 @@ private[ops] final class VersionedTree(prefix: String) {
         spark.sparkContext.hadoopConfiguration,
         skip = Set("_GRAFT_COMMIT"))
     }
+  }
+}
+
+private[ops] object VersionedTree {
+
+  /** Generation `gen`'s pending tombstones (the `gen/tombstones` tree
+    * every family's delete appends to), None when no delete landed
+    * there. Read with the footer-pinned schema ([[IvfLists.read]]), so
+    * no schema-inference job; tiny by the compaction-bounded assumption,
+    * so consumers broadcast it. Callers select their own id column.
+    */
+  def tombstones(spark: SparkSession, gen: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"$gen/tombstones")
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(IvfLists.read(spark, p.toString))
+    else None
   }
 }

@@ -653,8 +653,8 @@ object SimilarityQueries extends QueryGroup {
       probed
     }),
 
-    // Generation ROLLBACK on the IVF layout (lists_v{n} + keyed
-    // tombstones — the one index family VersionedTree does not cover),
+    // Generation ROLLBACK on the IVF layout (`ivf_v{n}` VersionedTree
+    // generations, whose compact consumes the folded generation's mask),
     // completing retention/rollback across all four persisted families:
     // branch the shared full-corpus tree, ship a BAD delete (every
     // vec_id ≡ 1 mod 5) and compact it with retain = 2 (the survivor

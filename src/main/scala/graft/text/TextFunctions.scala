@@ -18,13 +18,6 @@ object TextFunctions {
     when(length(trim(text)) === 0, lit(0L))
       .otherwise(size(split(trim(text), "\\s+")).cast("long"))
 
-  /** BPE-ish subword count: word-piece regex (letters / digits / other
-    * symbol runs), the usual pre-tokenizer approximation.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)).cast("long") +
-      size(filter(split(text, "[A-Za-z0-9\\s]+"), t => length(t) > 0)).cast("long")
-
   /** Punctuation-to-character ratio (ASCII `\p{Punct}`, counted in the
     * shared [[stats]] pass instead of a full-text regexp_replace rewrite).
     */
@@ -72,10 +65,6 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "et", "est"),
     "es" -> Seq("el", "los", "las", "es", "y"),
     "zh" -> Seq("的", "是", "了", "在", "和"))
-
-  /** Evidence count for one language: occurrences of its marker tokens. */
-  def langEvidence(text: Column, lang: String): Column =
-    stats(text).getField(s"ev_$lang")
 
   /** Predicted language: argmax evidence, ties broken by language code
     * order, "und" (undetermined) when no marker hits at all.

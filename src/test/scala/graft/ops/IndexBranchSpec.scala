@@ -114,20 +114,22 @@ class IndexBranchSpec extends AnyFunSuite with SparkTestBase {
     assert(!brProbe.exists(r => r._2 == 2L || r._2 == 7L))
     assert(probe(base) == baseProbe, "branch delete leaked into the base")
 
-    // Torn-branch invisibility: a clone that dies before the _SUCCESS
-    // marker leaves no resolvable lists tree at the destination.
+    // Torn-branch invisibility: a clone that dies before the
+    // _GRAFT_COMMIT marker leaves no resolvable generation at the
+    // destination.
     val torn = Files.createTempDirectory("ivf_torn").toString + "/t"
-    val live = spark.read.parquet(s"$base/centroids") // force base alive
+    val live = spark.read.parquet( // force base alive
+      s"$base/${IvfIndex.liveVersion(spark, base)}/centroids")
     assert(live.count() > 0)
     // Simulate: clone everything, then remove the marker the real
     // branch writes LAST.
     IvfIndex.branch(spark, base, torn)
-    val lists = new java.io.File(torn).listFiles()
-      .filter(_.getName.startsWith("lists")).head
-    assert(new java.io.File(lists, "_SUCCESS").exists())
-    new java.io.File(lists, "_SUCCESS").delete()
-    // liveLists falls back to the unversioned name only when nothing is
-    // committed; a versioned-but-markerless tree must not resolve.
+    val gen = new java.io.File(torn).listFiles()
+      .filter(_.getName.startsWith("ivf_v")).head
+    assert(new java.io.File(gen, "_GRAFT_COMMIT").exists())
+    new java.io.File(gen, "_GRAFT_COMMIT").delete()
+    // Nothing is committed: a versioned-but-markerless generation must
+    // not resolve.
     assertThrows[Exception](probe(torn))
   }
 

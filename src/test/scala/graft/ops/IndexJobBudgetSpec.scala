@@ -79,10 +79,10 @@ class IndexJobBudgetSpec extends AnyFunSuite with SparkTestBase {
     val n = batches(b => IvfIndex.applyMaintenanceBatch(spark, path, b,
       "vec_id", "embedding", "op"))
     assert(n <= IvfBudget, s"update batch ran $n jobs (budget $IvfBudget)")
-    val tree = s"$path/${IvfIndex.liveLists(spark, path)}"
-    assert(filesPerList(tree).nonEmpty && filesPerList(tree).forall(_ == 1),
-      filesPerList(tree))
-    assert(!new File(path).listFiles().exists(_.getName.startsWith("tombstones")))
+    val gen = s"$path/${IvfIndex.liveVersion(spark, path)}"
+    assert(filesPerList(s"$gen/lists").nonEmpty &&
+      filesPerList(s"$gen/lists").forall(_ == 1), filesPerList(s"$gen/lists"))
+    assert(!new File(s"$gen/tombstones").exists())
     val built = jobs(IvfIndex.topK(spark, path, probes, "vec_id", "embedding",
       k = 3, nprobe = 2): Unit)
     assert(built == 0, s"building the IVF probe frame ran $built jobs")

@@ -87,8 +87,8 @@ class IndexUpdateEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     if (upsert) {
       if (!dels.isEmpty) IvfIndex.delete(spark, path, dels, "vec_id")
       IvfIndex.compact(spark, path)
-      if (IvfIndex.tombstones(spark, path).isDefined) {
-        val cb = spark.read.parquet(IvfIndex.centDir(spark, path))
+      if (VersionedTree.tombstones(spark, ivfGen(path)).isDefined) {
+        val cb = spark.read.parquet(s"${ivfGen(path)}/centroids")
           .select(col("centroid_id"), col("centroid"))
           .localCheckpoint(eager = true)
         IvfIndex.write(path, adds, "vec_id", "embedding", cb)
@@ -100,8 +100,8 @@ class IndexUpdateEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val touched = assigned.select(col("__list")).distinct()
       .collect().map(_.get(0)).toSeq
     if (touched.nonEmpty) {
-      val live = IvfIndex.liveLists(spark, path)
-      val tree = spark.read.parquet(s"$path/$live")
+      val lists = s"${ivfGen(path)}/lists"
+      val tree = spark.read.parquet(lists)
       val fresh0 = assigned.join(
         tree.filter(col("list").isin(touched: _*)).select(col("neighbor_id")),
         Seq("neighbor_id"), "left_anti")
@@ -112,7 +112,7 @@ class IndexUpdateEquivalenceSpec extends AnyFunSuite with SparkTestBase {
       fresh.select(col("__list").as("list"), col("neighbor_id"),
           col("__nv").as("vec"), col("__nn").as("vnorm"))
         .repartition(col("list"))
-        .write.mode("append").partitionBy("list").parquet(s"$path/$live")
+        .write.mode("append").partitionBy("list").parquet(lists)
     }
     if (!upsert && !dels.isEmpty) IvfIndex.delete(spark, path, dels, "vec_id")
   }
@@ -120,9 +120,13 @@ class IndexUpdateEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   private def ivfProbe(path: String) = canon(IvfIndex.topK(spark, path,
     ivfProbes, "vec_id", "embedding", k = 4, nprobe = 2))
 
+  private def ivfGen(path: String): String =
+    s"$path/${IvfIndex.liveVersion(spark, path)}"
+
   private def ivfLive(path: String): Seq[String] = {
-    val tree = spark.read.parquet(s"$path/${IvfIndex.liveLists(spark, path)}")
-    rows(IvfIndex.tombstones(spark, path)
+    val gen = ivfGen(path)
+    val tree = spark.read.parquet(s"$gen/lists")
+    rows(VersionedTree.tombstones(spark, gen)
       .fold(tree)(t => tree.join(t, Seq("neighbor_id"), "left_anti")))
   }
 

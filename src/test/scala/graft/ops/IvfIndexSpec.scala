@@ -36,6 +36,16 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def probes: DataFrame = corpus.filter(col("vec_id") % 40 === 0)
 
+  /** The live generation's list tree. */
+  private def liveLists(path: String): String =
+    s"$path/${IvfIndex.liveVersion(spark, path)}/lists"
+
+  /** Every tombstones dir under `path`, across generations. */
+  private def tombstoneDirs(path: String): Seq[java.io.File] =
+    new java.io.File(path).listFiles().toSeq.filter(_.isDirectory)
+      .flatMap(g => g.listFiles().toSeq)
+      .filter(_.getName == "tombstones")
+
   private def canon(df: DataFrame): Set[Seq[Any]] =
     df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
         col("rank").cast("int"), round(col("cos"), 9))
@@ -55,12 +65,11 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
   test("lists land partitioned by Voronoi cell (one directory per list)") {
     val path = Files.createTempDirectory("ivf_layout").toString
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    val live = IvfIndex.liveLists(spark, path)
-    val dirs = new java.io.File(s"$path/$live").listFiles()
+    val dirs = new java.io.File(liveLists(path)).listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("list="))
     assert(dirs.nonEmpty && dirs.forall(_.matches("list=\\d+")), dirs.toSeq)
     // Every corpus vector exactly once across all lists.
-    val total = spark.read.parquet(s"$path/$live").count()
+    val total = spark.read.parquet(liveLists(path)).count()
     assert(total == 240L)
   }
 
@@ -113,11 +122,11 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     // some of them — capture an untouched list's file listing first.
     // (All clusters get odd members here, so instead capture EVERY list
     // file pre-append and assert the append only ADDED files.)
-    val live = IvfIndex.liveLists(spark, path)
+    val live = liveLists(path)
     def listFiles(): Set[String] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$path/$live"))
+      walk(new java.io.File(live))
         .filter(_.getName.endsWith(".parquet"))
         .map(f => s"${f.getPath}:${f.length}").toSet
     }
@@ -158,16 +167,14 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     IvfIndex.delete(spark, path, Seq(99999L).toDF("vec_id"), "vec_id")
     assert(canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2)) == want)
-    // Compact folds tombstones into the rewritten tree and clears them:
-    // same probe result, no tombstones/ dir, and the stored lists no
-    // longer contain the doomed ids at all.
+    // Compact folds tombstones into the rewritten generation and clears
+    // them: same probe result, no tombstones/ dir, and the stored lists
+    // no longer contain the doomed ids at all.
     IvfIndex.compact(spark, path)
     assert(canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2)) == want)
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith("tombstones")))
-    val stored = spark.read
-      .parquet(s"$path/${IvfIndex.liveLists(spark, path)}")
+    assert(tombstoneDirs(path).isEmpty)
+    val stored = spark.read.parquet(liveLists(path))
       .select("neighbor_id").as[Long].collect().toSet
     assert(stored.intersect(doomedIds).isEmpty)
   }
@@ -181,8 +188,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     // Rebuild over the FULL corpus: previously deleted ids are
     // legitimately present again and must not stay masked.
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith("tombstones")))
+    assert(tombstoneDirs(path).isEmpty)
     val scratch = Files.createTempDirectory("ivf_rebuild_ts_s").toString
     IvfIndex.write(scratch, corpus, "vec_id", "embedding", codebook)
     assert(canon(IvfIndex.topK(spark, path, probes, "vec_id",
@@ -196,16 +202,16 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val path = Files.createTempDirectory("ivf_stale_ts").toString
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    val oldTree = IvfIndex.liveLists(spark, path)
+    val oldTree = IvfIndex.liveVersion(spark, path)
     val doomed = corpus.filter(col("vec_id") % 5 === 2).select("vec_id")
     IvfIndex.delete(spark, path, doomed, "vec_id")
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    // Simulate a rebuild that crashed BEFORE its tombstone cleanup:
-    // resurrect the old generation's mask dir verbatim. Readers resolve
-    // the new tree and must never consult it.
+    // Simulate a rebuild that crashed BEFORE retiring the old generation:
+    // resurrect its mask dir verbatim. Readers resolve the new generation
+    // and must never consult it.
     doomed.select(col("vec_id").as("neighbor_id"))
-      .write.parquet(s"$path/tombstones_$oldTree")
-    assert(oldTree != IvfIndex.liveLists(spark, path))
+      .write.parquet(s"$path/$oldTree/tombstones")
+    assert(oldTree != IvfIndex.liveVersion(spark, path))
     val scratch = Files.createTempDirectory("ivf_stale_ts_s").toString
     IvfIndex.write(scratch, corpus, "vec_id", "embedding", codebook)
     assert(canon(IvfIndex.topK(spark, path, probes, "vec_id",
@@ -222,14 +228,14 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       "vec_id", "embedding")
     val want = canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2))
-    val preCompact = IvfIndex.liveLists(spark, path)
+    val preCompact = IvfIndex.liveVersion(spark, path)
     IvfIndex.compact(spark, path)
-    // The live tree is now the next committed versioned copy; the
-    // pre-compaction tree is retired.
-    val live = IvfIndex.liveLists(spark, path)
-    assert(live.matches("lists_v\\d+") && live != preCompact, live)
+    // The live generation is now the next committed version; the
+    // pre-compaction generation is retired.
+    val live = IvfIndex.liveVersion(spark, path)
+    assert(live.matches("ivf_v\\d+") && live != preCompact, live)
     assert(!new java.io.File(s"$path/$preCompact").exists())
-    val dirs = new java.io.File(s"$path/$live").listFiles()
+    val dirs = new java.io.File(s"$path/$live/lists").listFiles()
       .filter(_.isDirectory)
     assert(dirs.nonEmpty)
     dirs.foreach { d =>
@@ -239,14 +245,15 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     val got = canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2))
     assert(got == want && got.nonEmpty)
-    // Crash safety: an UNCOMMITTED higher version (no _SUCCESS marker —
-    // what an interrupted compaction leaves) is invisible to readers.
-    assert(new java.io.File(s"$path/lists_v7/list=0").mkdirs())
-    assert(IvfIndex.liveLists(spark, path) == live)
+    // Crash safety: an UNCOMMITTED higher version (no _GRAFT_COMMIT
+    // marker — what an interrupted compaction leaves) is invisible to
+    // readers.
+    assert(new java.io.File(s"$path/ivf_v7/lists/list=0").mkdirs())
+    assert(IvfIndex.liveVersion(spark, path) == live)
     // A committed second compaction numbers past the garbage, takes
-    // over, and retires the previous live tree.
+    // over, and retires the previous live generation.
     IvfIndex.compact(spark, path)
-    assert(IvfIndex.liveLists(spark, path) == "lists_v8")
+    assert(IvfIndex.liveVersion(spark, path) == "ivf_v8")
     assert(!new java.io.File(s"$path/$live").exists())
     assert(canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2)) == want)
@@ -257,18 +264,18 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     val path = Files.createTempDirectory("ivf_rebuild").toString
     IvfIndex.write(path, corpus.filter(col("vec_id") < 120),
       "vec_id", "embedding", codebook)
-    val v1 = IvfIndex.liveLists(spark, path)
+    val v1 = IvfIndex.liveVersion(spark, path)
     // Simulate the crashed-rebuild leftover: an uncommitted higher
     // version that the next rebuild must number past, never resurrect.
-    assert(new java.io.File(s"$path/lists_v5/list=0").mkdirs())
+    assert(new java.io.File(s"$path/ivf_v5/lists/list=0").mkdirs())
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    val v2 = IvfIndex.liveLists(spark, path)
-    assert(v2 == "lists_v6", v2)
-    // Superseded trees (v1 and the uncommitted garbage) are gone...
+    val v2 = IvfIndex.liveVersion(spark, path)
+    assert(v2 == "ivf_v6", v2)
+    // Superseded generations (v1 and the uncommitted garbage) are gone...
     assert(!new java.io.File(s"$path/$v1").exists())
-    assert(!new java.io.File(s"$path/lists_v5").exists())
+    assert(!new java.io.File(s"$path/ivf_v5").exists())
     // ...and the rebuilt index serves the FULL corpus.
-    assert(spark.read.parquet(s"$path/$v2").count() == 240L)
+    assert(spark.read.parquet(s"$path/$v2/lists").count() == 240L)
     val got = canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2))
     val want = canon(Similarity.ivfTopKWith(probes, corpus, "vec_id",
@@ -286,7 +293,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       Array.tabulate(dims)(d => if (d == 4) 10.0 else 0.0), "add"))
       .toDF("vec_id", "embedding", "op")
     def liveCopies(path: String): Long =
-      spark.read.parquet(s"$path/${IvfIndex.liveLists(spark, path)}")
+      spark.read.parquet(liveLists(path))
         .filter(col("neighbor_id") === 7L).count()
 
     val lax = Files.createTempDirectory("ivf_maint_lax").toString
@@ -311,8 +318,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     IvfIndex.applyMaintenanceBatch(spark, strict, mixed,
       "vec_id", "embedding", "op", strictLiveCheck = true)
     assert(liveCopies(strict) == 1L)
-    assert(spark.read.parquet(
-        s"$strict/${IvfIndex.liveLists(spark, strict)}")
+    assert(spark.read.parquet(liveLists(strict))
       .filter(col("neighbor_id") === 9000L).count() == 1L)
   }
 
@@ -328,13 +334,12 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     IvfIndex.delete(spark, path,
       corpus.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id")
     IvfIndex.compact(spark, path, retain = 2)
-    // Two committed trees on disk; the previous one kept its bytes but
-    // its consumed mask is cleared.
+    // Two committed generations on disk; the previous one kept its
+    // bytes but its consumed mask is cleared.
     val trees = new java.io.File(path).listFiles()
-      .map(_.getName).filter(_.matches("lists_v\\d+"))
+      .map(_.getName).filter(_.matches("ivf_v\\d+"))
     assert(trees.length == 2, trees.toSeq)
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith("tombstones")))
+    assert(tombstoneDirs(path).isEmpty)
     val masked = canon(IvfIndex.topK(spark, path, probes, "vec_id",
       "embedding", k = 4, nprobe = 2))
     assert(masked != pristine)
@@ -400,11 +405,11 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       "committing an unreadable empty tree") {
     val path = Files.createTempDirectory("ivf_all_gone").toString
     IvfIndex.write(path, corpus, "vec_id", "embedding", codebook)
-    val before = IvfIndex.liveLists(spark, path)
+    val before = IvfIndex.liveVersion(spark, path)
     IvfIndex.delete(spark, path, corpus.select("vec_id"), "vec_id")
     IvfIndex.compact(spark, path)
     // No new generation committed; probes still answer (zero rows).
-    assert(IvfIndex.liveLists(spark, path) == before)
+    assert(IvfIndex.liveVersion(spark, path) == before)
     assert(IvfIndex.topK(spark, path, probes, "vec_id", "embedding",
       k = 3, nprobe = 2).count() == 0L)
   }
@@ -436,7 +441,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(state() == want && want.nonEmpty)
     // The stored tree holds exactly ONE live copy of 7 (the new vector,
     // not a masked duplicate pair).
-    assert(spark.read.parquet(s"$path/${IvfIndex.liveLists(spark, path)}")
+    assert(spark.read.parquet(liveLists(path))
       .filter(col("neighbor_id") === 7L).count() == 1L)
     // At-least-once replay of the whole batch converges.
     IvfIndex.applyMaintenanceBatch(spark, path, batch,
@@ -475,8 +480,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(state() == want && want.nonEmpty,
       "whole-index update lost the re-adds")
     // No mask survives the rebuild; replay converges.
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith("tombstones")))
+    assert(tombstoneDirs(path).isEmpty)
     IvfIndex.applyMaintenanceBatch(spark, path, batch,
       "vec_id", "embedding", "op")
     assert(state() == want)
@@ -572,15 +576,15 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       "vec_id", "embedding", k = 4, nprobe = 2))
     assert(got == want && got.nonEmpty)
     // The resampled codebook is the full rule over survivors (odd-id
-    // centroids arrived; the deleted centroid candidate did not) —
-    // resolved via centDir (refit writes it VERSION-KEYED to the new
-    // tree; the legacy dir keeps the stale pairing for retained trees).
-    assert(spark.read.parquet(IvfIndex.centDir(spark, path)).count() ==
+    // centroids arrived; the deleted centroid candidate did not) — it
+    // commits inside the new generation, beside the lists it routed.
+    assert(spark.read.parquet(
+        s"$path/${IvfIndex.liveVersion(spark, path)}/centroids").count() ==
       fullCent.count())
-    // The rebuild folded the mask: no tombstoned rows in the new tree.
-    assert(spark.read.parquet(s"$path/${IvfIndex.liveLists(spark, path)}")
+    // The rebuild folded the mask: no tombstoned rows in the new lists.
+    assert(spark.read.parquet(liveLists(path))
       .filter(pmod(col("neighbor_id"), lit(16)) === 3).count() == 0)
-    assert(IvfIndex.tombstones(spark, path).isEmpty,
+    assert(tombstoneDirs(path).isEmpty,
       "refit must clear the consumed masks")
   }
 
@@ -604,15 +608,15 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     def probe() = canon(IvfIndex.topK(spark, path, oddProbes,
       "vec_id", "embedding", k = 4, nprobe = 1))
     val pre = probe()
-    val staleN = spark.read.parquet(s"$path/centroids").count()
+    val liveBefore = IvfIndex.liveVersion(spark, path)
+    val staleN = spark.read.parquet(s"$path/$liveBefore/centroids").count()
 
     IvfIndex.refit(spark, path, centroidMod = 5, retain = 2)
-    val liveAfter = IvfIndex.liveLists(spark, path)
-    assert(new java.io.File(s"$path/centroids_$liveAfter").exists(),
-      "refit must version-key its codebook to the new tree")
-    assert(spark.read.parquet(s"$path/centroids").count() == staleN,
-      "refit must not touch the legacy codebook (the retained tree's " +
-        "pairing)")
+    val liveAfter = IvfIndex.liveVersion(spark, path)
+    assert(new java.io.File(s"$path/$liveAfter/centroids").exists(),
+      "refit must commit its codebook inside the new generation")
+    assert(spark.read.parquet(s"$path/$liveBefore/centroids").count() ==
+      staleN, "refit must not touch the retained generation's codebook")
     val post = probe()
     assert(post != pre, "the resampled codebook must change routing " +
       "on this fixture (otherwise the rollback assertion is vacuous)")
@@ -623,20 +627,20 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     IvfIndex.rollback(spark, path)
     assert(probe() == pre,
       "rollback re-paired the previous tree with the wrong codebook")
-    assert(!new java.io.File(s"$path/centroids_$liveAfter").exists(),
-      "the retired refit's keyed codebook must go with its tree")
+    assert(!new java.io.File(s"$path/$liveAfter").exists(),
+      "the retired refit's codebook must go with its generation")
 
-    // Compact after a refit: the keyed codebook travels to the
-    // compacted tree name (same cells — probes must equal a survivors
-    // scratch build under the refit-rule codebook).
+    // Compact after a refit: the codebook travels to the compacted
+    // generation (same cells — probes must equal a survivors scratch
+    // build under the refit-rule codebook).
     IvfIndex.refit(spark, path, centroidMod = 5)
     val deadPred = col("vec_id") % 12 === 7
     IvfIndex.delete(spark, path,
       corpus.filter(deadPred).select("vec_id"), "vec_id")
     IvfIndex.compact(spark, path)
-    val liveC = IvfIndex.liveLists(spark, path)
-    assert(new java.io.File(s"$path/centroids_$liveC").exists(),
-      "compact must carry the keyed codebook to the compacted tree")
+    val liveC = IvfIndex.liveVersion(spark, path)
+    assert(new java.io.File(s"$path/$liveC/centroids").exists(),
+      "compact must carry the codebook to the compacted generation")
     val surv = corpus.filter(!deadPred)
     val scratch = Files.createTempDirectory("ivf_refit_atomic_scr")
       .toString
@@ -650,5 +654,37 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     val want = canon(IvfIndex.topK(spark, scratch, oddProbes,
       "vec_id", "embedding", k = 4, nprobe = 1))
     assert(probe() == want && want.nonEmpty)
+  }
+
+  test("a rebuild that crashes before its commit marker leaves the old " +
+    "codebook + lists pairing serving; the next write numbers past it") {
+    val path = Files.createTempDirectory("ivf_torn_rebuild").toString
+    def codebookEvery(m: Int) = corpus.filter(col("vec_id") % m === 0)
+      .select(col("vec_id").as("centroid_id"),
+        col("embedding").as("centroid"))
+    // The odd-cluster probes at nprobe = 1 of the refit-atomic test: the
+    // two codebooks route them differently.
+    val oddProbes = corpus.filter(col("vec_id") % 40 === 1)
+    def probe() = canon(IvfIndex.topK(spark, path, oddProbes,
+      "vec_id", "embedding", k = 4, nprobe = 1))
+    IvfIndex.write(path, corpus, "vec_id", "embedding", codebookEvery(10))
+    val pre = probe()
+    IvfIndex.write(path, corpus, "vec_id", "embedding", codebookEvery(5),
+      retain = 2)
+    val post = probe()
+    assert(post != pre, "the second codebook must change routing on " +
+      "this fixture (otherwise the crash assertion is vacuous)")
+    // A crash before the marker: every tree of the new generation
+    // landed, its commit marker did not.
+    val torn = IvfIndex.liveVersion(spark, path)
+    assert(new java.io.File(s"$path/$torn/_GRAFT_COMMIT").delete())
+    assert(probe() == pre,
+      "a torn rebuild paired its codebook with the previous lists")
+    IvfIndex.write(path, corpus, "vec_id", "embedding", codebookEvery(5))
+    val next = IvfIndex.liveVersion(spark, path)
+    assert(next.stripPrefix("ivf_v").toInt >
+      torn.stripPrefix("ivf_v").toInt, s"$next did not number past $torn")
+    assert(!new java.io.File(s"$path/$torn").exists())
+    assert(probe() == post)
   }
 }

@@ -38,14 +38,11 @@ class StreamingIvfMaintenanceSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2) + 0))
       .sortBy(x => (x._1, x._3)).toSeq
 
-  private def liveRows(path: String): Long = {
-    // Count every visible row in the live tree (masked-by-tombstone
+  private def liveRows(path: String): Long =
+    // Count every visible row in the live lists (masked-by-tombstone
     // included) — the replay test's "nothing appended twice" check.
-    val dirs = new java.io.File(path).listFiles()
-      .filter(f => f.getName.startsWith("lists"))
-      .sortBy(_.getName).lastOption
-    spark.read.parquet(dirs.get.getAbsolutePath).count()
-  }
+    spark.read.parquet(
+      s"$path/${IvfIndex.liveVersion(spark, path)}/lists").count()
 
   test("stream-built index == batch rebuild; replay is a no-op; compact resurrects") {
     val path = Files.createTempDirectory("graft_ivf_stream").toString
@@ -125,10 +122,8 @@ class StreamingIvfMaintenanceSpec extends AnyFunSuite with SparkTestBase {
     val w = StreamingIvfMaintenance.writer(path, "vec_id", "embedding",
       "op", strictLiveCheck = true)
     w(Seq((3L, reembedded, "add")).toDF("vec_id", "embedding", "op"), 0L)
-    val live = new java.io.File(path).listFiles()
-      .filter(f => f.getName.startsWith("lists"))
-      .sortBy(_.getName).last
-    val copies = spark.read.parquet(live.getAbsolutePath)
+    val copies = spark.read.parquet(
+        s"$path/${IvfIndex.liveVersion(spark, path)}/lists")
       .filter(col("neighbor_id") === 3L).count()
     assert(copies == 1L, s"live id duplicated under strict mode: $copies")
   }

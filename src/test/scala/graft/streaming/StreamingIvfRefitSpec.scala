@@ -59,7 +59,7 @@ class StreamingIvfRefitSpec extends AnyFunSuite with SparkTestBase {
     q.processAllAvailable()
     assert(refits.get() == 0, "in-distribution batch fired a refit")
     def lists() = spark.read.parquet(
-      s"$path/${IvfIndex.liveLists(spark, path)}")
+      s"$path/${IvfIndex.liveVersion(spark, path)}/lists")
     assert(lists().count() == 270, "batch 0 must append through")
 
     // Batch 1: one-hot on the ownerless axis — fires exactly one refit;
