@@ -114,21 +114,20 @@ object GraphIndex {
   private def liveGen(spark: SparkSession, path: String): String =
     s"$path/${liveVersion(spark, path)}"
 
-  private def rawNodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${liveGen(spark, path)}/nodes")
+  // Every reader below takes a generation its public caller resolved
+  // once, so one call reads one generation throughout.
+  private def rawNodes(spark: SparkSession, gen: String): DataFrame =
+    spark.read.parquet(s"$gen/nodes")
 
-  private def rawEdges(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${liveGen(spark, path)}/edges")
+  private def rawEdges(spark: SparkSession, gen: String): DataFrame =
+    spark.read.parquet(s"$gen/edges")
 
   /** Live node vectors, deleted ids masked out. */
-  def nodes(spark: SparkSession, path: String): DataFrame = {
-    val raw = rawNodes(spark, path)
-    VersionedTree.tombstones(spark, liveGen(spark, path))
-      .map(_.select(col("id"))) match {
-      case None => raw
-      case Some(t) => raw.join(broadcast(t), Seq("id"), "left_anti")
-    }
-  }
+  def nodes(spark: SparkSession, path: String): DataFrame =
+    liveNodes(spark, liveGen(spark, path))
+
+  private def liveNodes(spark: SparkSession, gen: String): DataFrame =
+    VersionedTree.masked(spark, gen, rawNodes(spark, gen), "id")
 
   /** Live edge lists (id, nbr, cos) — feed [[GraphSearch.topK]] as the
     * graph side. Deleted ids are masked from BOTH endpoints: a walk
@@ -136,42 +135,24 @@ object GraphIndex {
     * doc — the masked graph is exactly the stored graph minus deleted
     * rows, the replayable contract).
     */
-  def edges(spark: SparkSession, path: String): DataFrame = {
-    val raw = rawEdges(spark, path)
-    VersionedTree.tombstones(spark, liveGen(spark, path))
-      .map(_.select(col("id"))) match {
-      case None => raw
-      case Some(t) =>
-        raw.join(broadcast(t), Seq("id"), "left_anti")
-          .join(broadcast(t.select(col("id").as("nbr"))), Seq("nbr"),
-            "left_anti")
-          .select(col("id"), col("nbr"), col("cos"))
-    }
-  }
+  def edges(spark: SparkSession, path: String): DataFrame =
+    liveEdges(spark, liveGen(spark, path))
+
+  private def liveEdges(spark: SparkSession, gen: String): DataFrame =
+    VersionedTree.masked(spark, gen,
+      VersionedTree.masked(spark, gen, rawEdges(spark, gen), "id"), "nbr")
 
   /** Tombstone a batch of ids (see the object doc). Replay-safe by
-    * construction: only ids CURRENTLY stored land in the tombstone
-    * tree, so a redelivered delete (or a delete of a never-stored id)
-    * appends nothing and every read stays unchanged.
+    * construction ([[VersionedTree.tombstone]]): only ids CURRENTLY
+    * stored and not yet tombstoned land, so a redelivered delete (or a
+    * delete of a never-stored id) appends nothing and every read stays
+    * unchanged.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
-    val live = liveVersion(spark, path)
-    val notYetTombed = VersionedTree.tombstones(spark, s"$path/$live")
-      .map(_.select(col("id"))) match {
-      case None => ids.select(col(idCol).cast("long").as("id")).distinct()
-      case Some(t) => ids.select(col(idCol).cast("long").as("id"))
-        .distinct()
-        .join(broadcast(t.distinct()), Seq("id"), "left_anti")
-    }
-    val present = notYetTombed
-      .join(rawNodes(spark, path).select(col("id")), Seq("id"),
-        "left_semi")
-      .localCheckpoint(eager = true)
-    if (present.isEmpty) { Checkpoints.release(present); return }
-    present.coalesce(1).write.mode("append")
-      .parquet(s"$path/$live/tombstones")
-    Checkpoints.release(present)
+    val gen = liveGen(spark, path)
+    VersionedTree.tombstone(spark, gen, ids, idCol, rawNodes(spark, gen),
+      "id")
   }
 
   /** Fold pending tombstones into a fresh committed generation and
@@ -185,11 +166,11 @@ object GraphIndex {
     */
   def compact(spark: SparkSession, path: String, k: Int, rounds: Int,
       maxDegree: Int = 0, beam: Int = 0, entries: Int = 8,
-      overlay: Int = 2, simPrecision: Int = -1, retain: Int = 1): Unit =
-    applyMaintenanceBatch(spark, path,
-      rawNodes(spark, path).limit(0), "id", "vec", k, rounds,
-      maxDegree = maxDegree, beam = beam, entries = entries,
-      overlay = overlay, simPrecision = simPrecision, retain = retain)
+      overlay: Int = 2, simPrecision: Int = -1, retain: Int = 1): Unit = {
+    val gen = liveGen(spark, path)
+    maintain(spark, path, gen, rawNodes(spark, gen).limit(0), "id", "vec",
+      k, rounds, maxDegree, beam, entries, overlay, simPrecision, retain)
+  }
 
   /** One micro-batch of adds — the foreachBatch body behind
     * [[graft.streaming.StreamingGraphMaintenance]]. `k`/`maxDegree`/
@@ -207,15 +188,22 @@ object GraphIndex {
   def applyMaintenanceBatch(spark: SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String, k: Int,
       rounds: Int, maxDegree: Int = 0, beam: Int = 0, entries: Int = 8,
-      overlay: Int = 2, simPrecision: Int = -1, retain: Int = 1): Unit = {
+      overlay: Int = 2, simPrecision: Int = -1, retain: Int = 1): Unit =
+    maintain(spark, path, liveGen(spark, path), batch, idCol, vecCol, k,
+      rounds, maxDegree, beam, entries, overlay, simPrecision, retain)
+
+  private def maintain(spark: SparkSession, path: String, gen: String,
+      batch: DataFrame, idCol: String, vecCol: String, k: Int,
+      rounds: Int, maxDegree: Int, beam: Int, entries: Int, overlay: Int,
+      simPrecision: Int, retain: Int): Unit = {
     val deg = if (maxDegree > 0) maxDegree else 4 * k
     // A zero-row tombstone file never lands today (delete only writes
     // non-empty batches), but the eagerNonEmpty helper releases the
     // checkpoint before discarding an empty frame if one ever does.
-    val tomb = VersionedTree.tombstones(spark, liveGen(spark, path))
+    val tomb = VersionedTree.tombstones(spark, gen)
       .map(_.select(col("id")))
       .flatMap(t => Checkpoints.eagerNonEmpty(t.distinct()))
-    val stored = nodes(spark, path).localCheckpoint(eager = false)
+    val stored = liveNodes(spark, gen).localCheckpoint(eager = false)
     val adds = batch.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       // In-batch transport retry: deterministic vector choice, not
@@ -250,7 +238,7 @@ object GraphIndex {
     // beam budget), plus bucket-init pairs WITHIN the batch (rounds = 0
     // knnGraph = exactly the init stage). Skipped wholesale for a
     // fold-only batch (compact): no new vectors, nothing to seed.
-    val g0 = edges(spark, path)
+    val g0 = liveEdges(spark, gen)
     val stitched = if (freshEmpty) None else {
       val seeds = GraphSearch.topK(g0, "id", "nbr",
           stored, "id", "vec", fresh, "id", "vec",
@@ -277,7 +265,7 @@ object GraphIndex {
     val flagged = tomb match {
       case None => base
       case Some(t) =>
-        val holes = rawEdges(spark, path)
+        val holes = rawEdges(spark, gen)
           .join(broadcast(t.select(col("id").as("__tid"))),
             col("nbr") === col("__tid"), "left_semi")
           .select(col("id"))

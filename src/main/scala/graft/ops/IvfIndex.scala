@@ -44,6 +44,10 @@ object IvfIndex {
 
   private val versions = new VersionedTree("ivf")
 
+  private val lists = new IvfLists.Family("IvfIndex", versions,
+    Seq("centroids"), (gen, adds) => listRows(adds, "neighbor_id", "vec",
+      storedCent(adds.sparkSession, gen)))
+
   /** Highest committed generation name, e.g. "ivf_v3". */
   def liveVersion(spark: SparkSession, path: String): String =
     versions.liveVersion(spark, path)
@@ -94,32 +98,24 @@ object IvfIndex {
 
   /** Append a delta of NEW corpus vectors into the persisted lists
     * without rewriting untouched lists: each delta vector is assigned to
-    * its Voronoi cell with the STORED codebook (stored cnorm, same
-    * argmax + tie-break as [[write]] — so an appended vector lands in
-    * exactly the cell a from-scratch rebuild would put it in), and the
-    * append-mode partitioned write adds files ONLY under the `list=`
-    * directories the delta actually touches. Probe parity with a
-    * from-scratch build over old∪delta holds by construction; the spec
-    * and `q_ann_ivf_upsert` gate it.
+    * its Voronoi cell with the STORED codebook (same argmax + tie-break
+    * as [[write]], so it lands in exactly the cell a from-scratch
+    * rebuild would put it in), and files land ONLY under the `list=`
+    * directories the delta touches. Probe parity with a from-scratch
+    * build over old∪delta is gated by the spec and `q_ann_ivf_upsert`.
     *
-    * Contract: delta ids must be NEW — never currently stored (this is
-    * append, not upsert: re-appending duplicates the id in its list)
+    * Contract: delta ids must be NEW — never stored (append, not upsert)
     * and never tombstoned-but-uncompacted (tombstones carry no sequence
-    * numbers, so a re-appended deleted id stays masked at probe time
-    * and the next [[compact]] drops it; to resurrect an id, [[compact]]
-    * first, then append). Dedup upstream, e.g. [[Dedup.keepFirst]] on
-    * id. Growing corpora
-    * accumulate small files per touched list — run [[compact]] on the
-    * usual compactor cadence to restore one-file-per-list.
+    * numbers, so the re-appended id stays masked and the next [[compact]]
+    * drops it; to resurrect an id, compact first, then append). Small
+    * files accumulate per touched list until a [[compact]].
     *
-    * Crash caveat (append only): unlike [[write]]/[[compact]], an append
-    * lands files directly in the LIVE generation with no version swap,
-    * so a crash mid-append leaves a torn delta (some lists updated, some
-    * not) visible to readers — and re-running the append would duplicate
-    * the rows that did land. Recovery for a torn append is delete-the-
-    * delta-ids (tombstones mask the partial rows) then re-append after a
-    * [[compact]]; a deployment needing atomic deltas should batch them
-    * through [[compact]]'s versioned path instead.
+    * Crash caveat: an append lands files directly in the LIVE generation
+    * with no version swap, so a crash mid-append leaves a torn delta
+    * visible, and re-running it would duplicate the rows that landed.
+    * Recovery is delete the delta ids, [[compact]], re-append; the
+    * maintenance batch's replay guard ([[applyMaintenanceBatch]]) heals
+    * a torn batch by itself.
     */
   def append(
       spark: SparkSession,
@@ -127,11 +123,8 @@ object IvfIndex {
       delta: DataFrame,
       idCol: String,
       vecCol: String,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    val gen = s"$path/${liveVersion(spark, path)}"
-    IvfLists.write(listRows(delta, idCol, vecCol, storedCent(spark, gen)),
-      s"$gen/lists", "append", maxRecordsPerFile)
-  }
+      maxRecordsPerFile: Long = 5000000L): Unit =
+    lists.append(spark, path, delta, idCol, vecCol, maxRecordsPerFile)
 
   /** Corpus rows assigned to their Voronoi cell under `cent`, in the
     * stored list layout (list, neighbor_id, vec, vnorm).
@@ -143,55 +136,34 @@ object IvfIndex {
         col("__nv").as("vec"), col("__nn").as("vnorm"))
 
   /** One micro-batch of streaming index maintenance — the foreachBatch
-    * body behind [[graft.streaming.StreamingIvfMaintenance]]. The batch
+    * body behind [[graft.streaming.StreamingIvfMaintenance]], and the
+    * lifecycle [[PqIndex.applyMaintenanceBatch]] shares. The batch
     * carries an `opCol` of 'add' / 'delete' rows, classified by one
-    * aggregate; adds are assigned with the stored codebook and appended,
-    * deletes tombstone.
+    * aggregate; deletes tombstone as [[delete]] does, and adds are
+    * assigned with the stored codebook and appended.
     *
-    * IDEMPOTENT under at-least-once replay, which is what [[append]]
-    * alone is not: the batch's adds are anti-joined against the ids
-    * ALREADY STORED in the lists this batch touches — an in-plan
-    * semi-join on the `list` partition key, so dynamic partition
-    * pruning reads only those partitions' neighbor_id column and the
-    * check's cost tracks the batch's own fan-out, not the corpus. A
-    * replayed batch (crash before the checkpoint advanced) or a torn
-    * append's re-run therefore appends exactly the rows that are
-    * missing; tombstone deletes are anti-join semantics and already
-    * replay-clean.
+    * IDEMPOTENT under at-least-once replay, which [[append]] alone is
+    * not: adds are anti-joined against the ids ALREADY STORED in the
+    * lists the batch touches (a semi-join on the `list` partition key,
+    * so dynamic partition pruning reads only those cells), and deletes
+    * follow [[delete]]'s replay-safe rule. A replayed add re-derives the
+    * same assignment, so the check always sees it — but it is EXACTLY a
+    * replay guard: a live id whose CHANGED vector assigns to another list
+    * lands live twice. Adds are inserts, not upserts; for feeds that may
+    * re-embed live ids, `strictLiveCheck = true` checks the adds against
+    * the FULL tree's neighbor_id column (one id-column scan per batch)
+    * and drops them with a count in the maintenance log.
     *
-    * COROLLARY, stated because it is invisible from the types: the
-    * touched-list check is EXACTLY a replay guard, no more. A replayed
-    * add re-derives the same assignment (deterministic codebook argmin),
-    * so it always lands in a list the check reads — replays are complete
-    * no-ops. An add of a live id carrying a CHANGED vector is caught
-    * (and dropped, with a count in the maintenance log) only when the
-    * new vector still assigns to a list holding the stored copy; if it
-    * assigns ELSEWHERE, the default check cannot see the stored copy and
-    * the id lands live in two lists — probes then return it twice, with
-    * both vectors. Adds are inserts, not upserts; an update is a
-    * same-batch delete + add (below). Callers whose feed may carry
-    * re-embedded vectors for live ids should set `strictLiveCheck =
-    * true`: the adds are then checked against the FULL tree's
-    * neighbor_id column instead — making add-of-a-live-id an
-    * unconditional, logged no-op at the cost of one id-column scan per
-    * batch.
-    *
-    * Same single-writer assumption as every maintenance op here, and the
-    * [[append]] contract still applies across batches: a delete is
-    * terminal until the next [[compact]] folds its tombstone — an add of
-    * a tombstoned-but-uncompacted id lands masked (spec-gated:
-    * delete → compact → re-add resurrects).
-    *
-    * SAME-ID delete + add in ONE batch is an UPDATE, and an update
-    * batch commits ONE new generation from one partitioned write (the
-    * [[compact]] commit): the stored rows minus (pending tombstones ∪
-    * the batch's deletes), plus the adds guarded against those
-    * survivors. One survivor rewrite per update-carrying batch, leaving
-    * one file per list and no tombstones; the lists are never empty,
-    * since an update always keeps its add. A redelivered update batch
-    * re-masks and re-adds the same vector — it converges. `retain`
-    * passes through, and the retained generation keeps its pending
-    * tombstones, so a [[rollback]] restores exactly the pre-batch probes.
+    * Across batches a delete is terminal until the next [[compact]]
+    * folds it: an add of a tombstoned-but-uncompacted id lands masked.
+    * SAME-ID delete + add in ONE batch is an UPDATE, and an update batch
+    * commits ONE new generation from one partitioned write: the stored
+    * rows minus (pending tombstones ∪ the batch's deletes), plus the
+    * adds guarded against those survivors — one file per list and no
+    * tombstones, never empty (an update keeps its add). A redelivered
+    * update converges. `retain` passes through, and the retained
+    * generation keeps its pending tombstones, so a [[rollback]] restores
+    * exactly the pre-batch probes. Single writer, as everywhere here.
     */
   def applyMaintenanceBatch(
       spark: SparkSession,
@@ -202,66 +174,27 @@ object IvfIndex {
       opCol: String,
       maxRecordsPerFile: Long = 5000000L,
       strictLiveCheck: Boolean = false,
-      retain: Int = 1): Unit = {
-    val shape = IvfLists.classify(batch, idCol, vecCol, opCol)
-    val counts = new IvfLists.GuardCounts(shape.adds)
-    val live = liveVersion(spark, path)
-    val gen = s"$path/$live"
-    // Adds assigned with the stored codebook, in the stored column types,
-    // behind the replay guard over `stored`.
-    def fresh(stored: DataFrame): DataFrame = {
-      val adds = IvfLists.adds(batch, idCol, vecCol, opCol)
-        .select(col(idCol),
-          col(vecCol).cast(stored.schema("vec").dataType).as(vecCol))
-      IvfLists.guard(
-        listRows(adds, idCol, vecCol, storedCent(spark, gen)),
-        stored, strictLiveCheck, counts)
-    }
-    if (shape.update) {
-      val kept = survivors(spark, gen,
-        Some(IvfLists.deletes(batch, idCol, opCol)))
-      commitLists(spark, path, live, kept.unionByName(fresh(kept)),
-        maxRecordsPerFile, retain)
-    } else {
-      if (shape.adds > 0) IvfLists.write(
-        fresh(IvfLists.read(spark, s"$gen/lists")), s"$gen/lists",
-        "append", maxRecordsPerFile)
-      if (shape.deletes)
-        tombstone(gen, IvfLists.deletes(batch, idCol, opCol))
-    }
-    counts.log("IvfIndex")
-  }
+      retain: Int = 1): Unit =
+    lists.applyBatch(spark, path, batch, idCol, vecCol, opCol,
+      maxRecordsPerFile, strictLiveCheck, retain)
 
   /** Mark stored vectors DELETED without touching the lists: ids land in
-    * the live generation's `tombstones/` (plain parquet, append per
-    * delete batch) and every probe anti-joins them out before scoring —
-    * the standard vector-store delete (FAISS `remove_ids` rewrites in
-    * place; a parquet-backed index can't, so it tombstones like every
-    * LSM). [[compact]] folds tombstones into the rewritten generation,
-    * restoring probe cost. Deleting an id that was never stored — or
-    * twice — is a harmless no-op (anti-join semantics): every id lands,
-    * stored or not, which keeps a delete a single write. The mask belongs
-    * to its generation, so a rebuild's readers never see the previous
-    * generation's masks.
-    *
-    * Tombstones are assumed COMPACTION-BOUNDED (a maintenance cadence
-    * clears them); the probe-side anti-join is keyed on neighbor_id and
-    * AQE broadcasts the tombstone side while it is small. An unbounded
-    * delete backlog should compact, not accumulate.
+    * the live generation's `tombstones/` and every probe anti-joins them
+    * out before scoring — the LSM delete a parquet-backed index can do
+    * (FAISS `remove_ids` rewrites in place). Replay-safe, the rule of all
+    * four index families ([[VersionedTree.tombstone]]): only ids that are
+    * stored and not yet tombstoned land, so a redelivered delete, or a
+    * delete of an id never stored, appends nothing. The mask belongs to
+    * its generation, so a rebuild's readers never see it; [[compact]]
+    * folds it, restoring probe cost. Tombstones are assumed
+    * COMPACTION-BOUNDED: the probe broadcasts them.
     */
   def delete(
       spark: SparkSession,
       path: String,
       ids: DataFrame,
       idCol: String): Unit =
-    tombstone(s"$path/${liveVersion(spark, path)}",
-      ids.select(col(idCol).as("neighbor_id")))
-
-  /** Append a `neighbor_id` mask to generation `gen`'s tombstones. */
-  private def tombstone(gen: String, ids: DataFrame): Unit =
-    ids.distinct().coalesce(1)
-      .write.mode("append")
-      .parquet(s"$gen/tombstones")
+    lists.delete(spark, path, ids, idCol)
 
   /** REFIT the coarse codebook from the index's OWN live rows and
     * rebuild — the routing layer's drift ACTION ([[routingDrift]] /
@@ -295,7 +228,7 @@ object IvfIndex {
     // centroid frame is EAGER: it feeds the codebook write, the require,
     // and the broadcast assignment, and re-deriving it lazily would
     // re-scan the full index once per consumer.
-    val corpus = survivors(spark, s"$path/${liveVersion(spark, path)}")
+    val corpus = lists.survivors(spark, s"$path/${liveVersion(spark, path)}")
       .select(col("neighbor_id"), col("vec"))
     val centRows = corpus
       .filter(pmod(col("neighbor_id"), lit(centroidMod)) === 0 &&
@@ -376,7 +309,7 @@ object IvfIndex {
     */
   private def liveRoutingErr(spark: SparkSession, gen: String,
       centStored: DataFrame): DataFrame = {
-    survivors(spark, gen)
+    lists.survivors(spark, gen)
       .select(col("list").cast("long").as("__cid"), col("vec"),
         col("vnorm"))
       .join(broadcast(centStored), Seq("__cid"))
@@ -387,93 +320,38 @@ object IvfIndex {
           .cast("long").as("err"))
   }
 
-  /** Generation `gen`'s list rows minus its tombstones and the optional
-    * `alsoMasked` ids (a `neighbor_id` column) — the survivor frame
-    * every fold, refit, drift scan and probe reads.
-    */
-  private def survivors(spark: SparkSession, gen: String,
-      alsoMasked: Option[DataFrame] = None): DataFrame = {
-    val stored = IvfLists.read(spark, s"$gen/lists")
-    (VersionedTree.tombstones(spark, gen)
-        .map(_.select(col("neighbor_id"))) ++ alsoMasked)
-      .reduceOption(_ unionByName _)
-      .fold(stored)(m => stored.join(m, Seq("neighbor_id"), "left_anti"))
-  }
-
   /** Rewrite the inverted lists back to one writer per list, merging the
     * small files [[append]] accumulates and folding pending tombstones:
     * the survivors commit as the next generation beside a hard link of
-    * the live codebook (deletes never move centroids).
+    * the live codebook (deletes never move centroids). Every compact
+    * rewrites, tombstones pending or not; [[PqIndex.compact]] is the
+    * same implementation.
     *
-    * MASK CONSUMPTION, the one rule where IVF differs from [[PqIndex]]:
-    * after the new generation commits, the folded generation's
-    * `tombstones/` is deleted. With `retain` > 1 the folded generation
-    * survives WITHOUT its mask, so delete → compact(retain = 2) →
-    * [[rollback]] RESURRECTS the deleted ids — the rollback undoes the
-    * delete + compact pair as one step, the bad-delete-shipped undo. A
-    * crash between the commit and that delete leaves the retained mask
-    * in place, and a rollback then restores the post-delete state
-    * instead — conservative, and the stale dir is plain to delete by
-    * hand.
-    *
-    * A reader that resolved the OLD generation just before its retirement
-    * can still fail mid-scan; production deployments should defer the
-    * delete by a scan-length grace period (the same retention discipline
-    * as the gold compactor).
+    * MASK CONSUMPTION: after the commit the folded generation's
+    * `tombstones/` is deleted, so with `retain` > 1 delete →
+    * compact(retain = 2) → [[rollback]] RESURRECTS the deleted ids — the
+    * bad-delete-shipped undo. (A crash between the commit and that
+    * delete leaves the mask, and a rollback then restores the
+    * post-delete state instead.) An ALL-TOMBSTONED index keeps its mask
+    * instead of committing an empty generation: NEW ids still append and
+    * serve, but repopulating the masked ids needs a rebuild ([[write]]).
+    * A reader that resolved the retired generation can still fail
+    * mid-scan; deployments should defer its delete by a scan-length grace
+    * period (the gold compactor's retention discipline).
     */
   def compact(
       spark: SparkSession,
       path: String,
       maxRecordsPerFile: Long = 5000000L,
-      retain: Int = 1): Unit = {
-    val live = liveVersion(spark, path)
-    val folded = survivors(spark, s"$path/$live")
-    // An ALL-TOMBSTONED index must keep its mask instead of committing
-    // an empty generation: a partitioned overwrite of zero rows lands no
-    // parquet files, and every later read of the resolved live lists
-    // dies on schema inference. The mask already hides everything, so
-    // skipping the rewrite is behavior-identical for probes (the
-    // PqIndex/MaxSimIndex all-deleted stance).
-    if (folded.isEmpty) {
-      System.err.println(s"[graft] IvfIndex.compact: every stored row " +
-        s"under $path is tombstoned — keeping the mask instead of " +
-        "committing an empty tree. This mask can never be folded (every " +
-        "compact re-hits this case): NEW ids still append and serve " +
-        "(the mask only hides the tombstoned ids), but repopulating the " +
-        "masked ids needs a rebuild (write), which clears it")
-      return
-    }
-    commitLists(spark, path, live, folded, maxRecordsPerFile, retain)
-    val mask = new org.apache.hadoop.fs.Path(s"$path/$live/tombstones")
-    mask.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(mask, true): Unit
-  }
-
-  /** Commit `rows` (the stored list layout) as the next generation's
-    * lists, with the live generation's codebook hard-linked in
-    * ([[TreeClone]]) — the one rewrite [[compact]] and an update batch
-    * share.
-    */
-  private def commitLists(spark: SparkSession, path: String, live: String,
-      rows: DataFrame, maxRecordsPerFile: Long, retain: Int): Unit =
-    versions.commitNext(spark, path, retain) { gen =>
-      IvfLists.write(rows, s"$gen/lists", "overwrite", maxRecordsPerFile)
-      TreeClone.linkOrCopy(
-        new org.apache.hadoop.fs.Path(s"$path/$live/centroids"),
-        new org.apache.hadoop.fs.Path(s"$gen/centroids"),
-        spark.sparkContext.hadoopConfiguration)
-    }: Unit
+      retain: Int = 1): Unit =
+    lists.compact(spark, path, maxRecordsPerFile, retain)
 
   /** Retire the live generation so the previous committed one serves
     * again, codebook included — possible only when the superseding
-    * [[write]]/[[refit]]/[[compact]]/update batch ran with `retain` > 1
-    * ([[VersionedTree.rollback]]). The restored generation serves with
-    * whatever tombstones it still has: a rebuild, refit or update batch
-    * leaves the previous generation's mask in place (its deletes were
-    * serving state independent of the commit being undone), while a
-    * completed [[compact]] consumed the mask it folded — so
-    * delete → compact(retain = 2) → rollback RESURRECTS the deleted ids.
-    * Returns the restored generation's name.
+    * commit ran with `retain` > 1 ([[VersionedTree.rollback]]). The
+    * restored generation keeps whatever mask it still has: a rebuild,
+    * refit or update batch leaves it, a completed [[compact]] consumed
+    * it. Returns the restored generation's name.
     */
   def rollback(spark: SparkSession, path: String): String =
     versions.rollback(spark, path)
@@ -489,18 +367,18 @@ object IvfIndex {
       vecCol: String,
       k: Int,
       nprobe: Int = 3): DataFrame = {
-    // Tombstoned rows leave the candidate stream BEFORE scoring — keyed
-    // anti-join on neighbor_id, broadcast by AQE while the tombstone set
-    // is compaction-bounded. Placed after the list scan so dynamic
+    // Tombstoned rows leave the candidate stream BEFORE scoring — a
+    // broadcast anti-join on neighbor_id after the list scan, so dynamic
     // partition pruning on `list` is undisturbed.
     val gen = s"$path/${liveVersion(spark, path)}"
-    val live = survivors(spark, gen)
+    val live = lists.survivors(spark, gen)
     val cent = IvfLists.read(spark, s"$gen/centroids").select(
       IvfLists.listKey(col("centroid_id"), live.schema("list").dataType)
         .as("__cid"),
       col("centroid").as("__cv"), col("cnorm").as("__cn"))
-    val lists = live.select(col("list").as("__list"),
-      col("neighbor_id"), col("vec").as("__nv"), col("vnorm").as("__nn"))
-    Similarity.probeInvertedLists(probes, idCol, vecCol, k, cent, lists, nprobe)
+    Similarity.probeInvertedLists(probes, idCol, vecCol, k, cent,
+      live.select(col("list").as("__list"), col("neighbor_id"),
+        col("vec").as("__nv"), col("vnorm").as("__nn")),
+      nprobe)
   }
 }

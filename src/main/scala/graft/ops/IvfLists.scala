@@ -6,10 +6,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
   ShortType, StructType}
 
 /** What the two IVF families ([[IvfIndex]], [[PqIndex]]) share: their
-  * list trees (rows PARTITIONED BY `list`) and the maintenance batch's
-  * classifier and touched-list replay guard.
+  * list trees (rows PARTITIONED BY `list`), the maintenance batch's
+  * classifier and touched-list replay guard, and the one generation
+  * lifecycle ([[Family]]) above the build and the probe.
   */
-private[ops] object IvfLists {
+private[graft] object IvfLists {
 
   /** Read an engine-written parquet tree with its data schema PINNED
     * from one data file's footer (the Spark row schema every Spark
@@ -99,20 +100,6 @@ private[ops] object IvfLists {
     Shape(r.getInt(0).toLong, r.getBoolean(1), r.getBoolean(2))
   }
 
-  /** The batch's adds, one row per id: an id twice in one batch
-    * (transport retry inside the batch) must not land twice, and the
-    * vector choice is deterministic (max), not arrival order.
-    */
-  def adds(batch: DataFrame, idCol: String, vecCol: String,
-      opCol: String): DataFrame =
-    batch.filter(col(opCol) === "add")
-      .select(col(idCol), col(vecCol))
-      .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
-
-  /** The batch's deleted ids as a `neighbor_id` mask column. */
-  def deletes(batch: DataFrame, idCol: String, opCol: String): DataFrame =
-    batch.filter(col(opCol) === "delete").select(col(idCol).as("neighbor_id"))
-
   /** The touched-list REPLAY GUARD: drop every assigned add whose id is
     * already in `stored` within a list some add of the batch touches
     * (`wholeTree`: anywhere in `stored`). A replayed add re-derives the
@@ -152,6 +139,112 @@ private[ops] object IvfLists {
         System.err.println(s"[graft] $family.applyMaintenanceBatch: " +
           s"${offered - n} add(s) for already-live ids ignored (adds are " +
           "not upserts; an update is a same-batch delete+add)"))
+    }
+  }
+
+  /** The one append, delete, compact, maintenance batch and survivor
+    * read of [[IvfIndex]] and [[PqIndex]] (their docs state the rules).
+    * A family is its [[VersionedTree]], the `linked` trees a rewritten
+    * generation hard-links from the live one (deletes and updates never
+    * move centroids or codes), and `rowsOf`: (generation, adds as
+    * (neighbor_id, vec)) → list rows under that generation's codebooks.
+    */
+  final class Family(name: String, versions: VersionedTree,
+      linked: Seq[String], rowsOf: (String, DataFrame) => DataFrame) {
+
+    def append(spark: SparkSession, path: String, delta: DataFrame,
+        idCol: String, vecCol: String, maxRecordsPerFile: Long): Unit = {
+      val gen = s"$path/${versions.liveVersion(spark, path)}"
+      write(rowsOf(gen, delta.select(col(idCol).as("neighbor_id"),
+          col(vecCol).as("vec"))),
+        s"$gen/lists", "append", maxRecordsPerFile)
+    }
+
+    def delete(spark: SparkSession, path: String, ids: DataFrame,
+        idCol: String): Unit =
+      tombstone(spark, s"$path/${versions.liveVersion(spark, path)}", ids,
+        idCol)
+
+    private def tombstone(spark: SparkSession, gen: String, ids: DataFrame,
+        idCol: String): Unit =
+      VersionedTree.tombstone(spark, gen, ids, idCol,
+        read(spark, s"$gen/lists"), "neighbor_id")
+
+    /** Generation `gen`'s list rows minus its tombstones and the optional
+      * `also` ids — what every fold, refit, drift scan and IVF probe reads.
+      */
+    def survivors(spark: SparkSession, gen: String,
+        also: Option[DataFrame] = None): DataFrame =
+      VersionedTree.masked(spark, gen, read(spark, s"$gen/lists"),
+        "neighbor_id", also)
+
+    def compact(spark: SparkSession, path: String, maxRecordsPerFile: Long,
+        retain: Int): Unit = {
+      val live = versions.liveVersion(spark, path)
+      val folded = survivors(spark, s"$path/$live")
+      // A zero-row partitioned overwrite lands no parquet files for later
+      // reads to infer a schema from; the mask already hides everything.
+      if (folded.isEmpty) {
+        System.err.println(s"[graft] $name.compact: every stored row " +
+          s"under $path is tombstoned — keeping the mask instead of " +
+          "committing an empty generation. This mask can never be folded " +
+          "(every compact re-hits this case): NEW ids still append and " +
+          "serve (the mask only hides the tombstoned ids), but " +
+          "repopulating the masked ids needs a rebuild (write), which " +
+          "clears it")
+        return
+      }
+      commitLists(spark, path, live, folded, maxRecordsPerFile, retain)
+      val mask = new org.apache.hadoop.fs.Path(s"$path/$live/tombstones")
+      mask.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(mask, true): Unit
+    }
+
+    /** `wholeTree` widens the replay guard to the full tree ([[guard]]). */
+    def applyBatch(spark: SparkSession, path: String, batch: DataFrame,
+        idCol: String, vecCol: String, opCol: String,
+        maxRecordsPerFile: Long, wholeTree: Boolean, retain: Int): Unit = {
+      val shape = classify(batch, idCol, vecCol, opCol)
+      val counts = new GuardCounts(shape.adds)
+      val live = versions.liveVersion(spark, path)
+      val gen = s"$path/$live"
+      val deletes = batch.filter(col(opCol) === "delete")
+        .select(col(idCol).cast("long").as("neighbor_id"))
+      // The adds, one row per id (an id twice in one batch must not land
+      // twice; the vector choice is max, not arrival order), in the
+      // stored vec type, behind the replay guard over `stored`.
+      def fresh(stored: DataFrame): DataFrame = {
+        val adds = batch.filter(col(opCol) === "add")
+          .groupBy(col(idCol).as("neighbor_id"))
+          .agg(max(col(vecCol)).as("vec"))
+          .select(col("neighbor_id"),
+            col("vec").cast(stored.schema("vec").dataType).as("vec"))
+        guard(rowsOf(gen, adds), stored, wholeTree, counts)
+      }
+      if (shape.update) {
+        val kept = survivors(spark, gen, Some(deletes))
+        commitLists(spark, path, live, kept.unionByName(fresh(kept)),
+          maxRecordsPerFile, retain)
+      } else {
+        if (shape.deletes) tombstone(spark, gen, deletes, "neighbor_id")
+        if (shape.adds > 0) write(fresh(read(spark, s"$gen/lists")),
+          s"$gen/lists", "append", maxRecordsPerFile)
+      }
+      counts.log(name)
+    }
+
+    /** Commit `rows` as the next generation's lists beside hard links of
+      * the live generation's `linked` trees.
+      */
+    private def commitLists(spark: SparkSession, path: String, live: String,
+        rows: DataFrame, maxRecordsPerFile: Long, retain: Int): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      versions.commitNext(spark, path, retain) { gen =>
+        write(rows, s"$gen/lists", "overwrite", maxRecordsPerFile)
+        linked.foreach(t => TreeClone.linkOrCopy(
+          new org.apache.hadoop.fs.Path(s"$path/$live/$t"),
+          new org.apache.hadoop.fs.Path(s"$gen/$t"), conf))
+      }: Unit
     }
   }
 }

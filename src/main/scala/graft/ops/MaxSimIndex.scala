@@ -219,30 +219,17 @@ object MaxSimIndex {
     Checkpoints.release(stored)
   }
 
-  /** Tombstone a batch of doc ids (see the object doc). Replay-safe:
-    * only currently-stored ids land, so a redelivered delete (or a
-    * delete of a never-stored id) appends nothing.
+  /** Tombstone a batch of doc ids (see the object doc). Replay-safe
+    * ([[VersionedTree.tombstone]]): only stored, not-yet-tombstoned ids
+    * land, so a redelivered delete (or a delete of a never-stored id)
+    * appends nothing.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
     requireLongIds(ids, idCol, "delete")
-    val live = liveVersion(spark, path)
-    val batch0 = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val batch = (VersionedTree.tombstones(spark, s"$path/$live")
-      .map(_.select(col("id"))) match {
-      case None => batch0
-      case Some(t) =>
-        batch0.join(broadcast(t.distinct()), Seq("id"), "left_anti")
-    }).localCheckpoint(eager = true)
-    val present = readToks(spark, s"$path/$live/toks")
-      .select(col("id")).distinct()
-      .join(broadcast(batch), Seq("id"), "left_semi")
-      .localCheckpoint(eager = true)
-    if (!present.isEmpty)
-      present.coalesce(1).write.mode("append")
-        .parquet(s"$path/$live/tombstones")
-    Checkpoints.release(batch)
-    Checkpoints.release(present)
+    val gen = s"$path/${liveVersion(spark, path)}"
+    VersionedTree.tombstone(spark, gen, ids, idCol,
+      readToks(spark, s"$gen/toks"), "id")
   }
 
   /** Fold pending tombstones into a rewritten committed generation
@@ -251,21 +238,16 @@ object MaxSimIndex {
     * tombstoned.
     */
   def compact(spark: SparkSession, path: String, retain: Int = 1): Unit = {
-    val live = liveVersion(spark, path)
-    val m = readMeta(spark, s"$path/$live")
-    val tomb = VersionedTree.tombstones(spark, s"$path/$live")
-      .map(_.select(col("id")))
-      .flatMap(t => Checkpoints.eagerNonEmpty(t.distinct()))
-    if (tomb.isEmpty) return
+    val live = s"$path/${liveVersion(spark, path)}"
+    if (VersionedTree.tombstones(spark, live).isEmpty) return
+    val m = readMeta(spark, live)
     versions.commitNext(spark, path, retain) { gen =>
-      readToks(spark, s"$path/$live/toks")
-        .join(broadcast(tomb.get), Seq("id"), "left_anti")
+      VersionedTree.masked(spark, live, readToks(spark, s"$live/toks"), "id")
         .repartitionByRange(col("t"), col("b"), col("id"))
         .sortWithinPartitions(col("b"), col("id"), col("pos"))
         .write.mode("overwrite").partitionBy("t").parquet(s"$gen/toks")
       writeMeta(spark, gen, m)
-    }
-    tomb.foreach(Checkpoints.release)
+    }: Unit
   }
 
   /** Probe batches against the stored buckets — result-identical to
@@ -279,13 +261,8 @@ object MaxSimIndex {
     requireLongIds(queryToks, idCol, "topK")
     val live = liveVersion(spark, path)
     val m = readMeta(spark, s"$path/$live")
-    val toksRaw = readToks(spark, s"$path/$live/toks")
-    val toks = VersionedTree.tombstones(spark, s"$path/$live")
-      .map(_.select(col("id"))) match {
-      case None => toksRaw
-      case Some(t) =>
-        toksRaw.join(broadcast(t.distinct()), Seq("id"), "left_anti")
-    }
+    val toks = VersionedTree.masked(spark, s"$path/$live",
+      readToks(spark, s"$path/$live/toks"), "id")
 
     // Probe bags are query-batch-sized; the two consumers (bucket
     // explode, rerank) just recompute the projection — a lazy checkpoint

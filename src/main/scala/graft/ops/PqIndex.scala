@@ -52,34 +52,29 @@ import graft.ml.Pq.PqModel
   * between-rebuilds path.
   *
   * DELETES need no refit — removing rows leaves every stored code and
-  * both codebooks exactly valid — so the [[MaxSimIndex]] pure-mask
-  * pattern completes the life cycle here too: [[delete]] appends doc
-  * ids under the live generation (`pq_v{n}/tombstones/`, only
-  * currently-stored ids land, so a replayed delete appends nothing),
-  * [[topK]] anti-joins them out of the routed candidate stream BEFORE
-  * the ADC candidateK cut (the rerank only sees ADC survivors, so one
-  * mask covers both stages and the DPP-pruned scans stay untouched) —
-  * making a tombstoned probe EXACTLY equal a probe of a from-scratch
-  * build over
-  * the survivors UNDER THE SAME codebooks (`q_ann_ivfpq_delete` gates
-  * that equality by oracle) — and [[compact]] folds the mask into a
-  * rewritten generation whose centroids and model are CLONED, not
-  * refit (re-quantizing on a delete would silently move every
-  * surviving code). A deleted id is terminal until [[compact]] folds
-  * its mask ([[IvfIndex]]'s stance): re-[[append]]ing it earlier lands
-  * rows that stay masked and that the next compact drops — resurrect =
-  * compact first, then append. ONE caveat: when the mask covers the
-  * ENTIRE index, compact keeps the mask instead of committing an
-  * unreadable empty tree (see [[compact]]), so the fold never happens
-  * and resurrect-by-compact is unreachable — a whole-index replacement
-  * is a [[write]] (rebuild), which clears the consumed mask with the
-  * retired tree.
+  * both codebooks exactly valid — and run [[IvfIndex]]'s lifecycle, one
+  * implementation for both ([[IvfLists.Family]]): [[delete]] lands only
+  * stored, not-yet-tombstoned ids under `pq_v{n}/tombstones/` (a
+  * replayed delete appends nothing); [[topK]] masks them out of the
+  * routed candidate stream BEFORE the ADC candidateK cut, so a
+  * tombstoned probe EXACTLY equals a build over the survivors UNDER THE
+  * SAME codebooks (`q_ann_ivfpq_delete`); [[compact]] always rewrites
+  * the survivors with centroids and model CLONED, not refit, and
+  * consumes the mask it folded. A deleted id is terminal until a
+  * compact folds its mask — resurrect = compact, then append — except
+  * that an all-tombstoned index keeps its mask, so replacing the whole
+  * index is a [[write]].
   *
   * Single-writer, like every index here.
   */
 object PqIndex {
 
   private val versions = new VersionedTree("pq")
+
+  private val lists = new IvfLists.Family("PqIndex", versions,
+    Seq("centroids", "model"), (gen, adds) => encodedLists(adds,
+      "neighbor_id", "vec", storedCent(adds.sparkSession, gen),
+      readModel(adds.sparkSession, gen)))
 
   def liveVersion(spark: SparkSession, path: String): String =
     versions.liveVersion(spark, path)
@@ -143,28 +138,15 @@ object PqIndex {
   }
 
   /** Append a delta of NEW corpus vectors under the live generation's
-    * FROZEN codebooks (see the object doc): stored-model PQ encode +
-    * stored-centroid routing, append-mode partitioned write touching
-    * only the delta's cells — one columnar row per vector carrying
-    * (pq_code, vec, vnorm) exactly as [[write]] lays it out, so ADC
-    * and rerank serve appended rows indistinguishably from built ones.
-    *
-    * Contract mirrors [[IvfIndex.append]]: delta ids must be NEW —
-    * never currently stored (append, not upsert) and never
-    * tombstoned-but-uncompacted (the mask wins until [[compact]], which
-    * then drops the re-appended copy too; resurrect = compact, then
-    * append). Appends land in the LIVE generation with no version
-    * swap, so a crash mid-append leaves a torn delta — recovery is
-    * delete-the-delta-ids → compact → re-append. Small files
-    * accumulate per touched cell; compact on the usual cadence.
+    * FROZEN codebooks (see the object doc): stored-model PQ encode and
+    * stored-centroid routing, one row per vector laid out exactly as
+    * [[write]] lays it out. [[IvfIndex.append]]'s contract and crash
+    * caveat apply unchanged.
     */
   def append(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, vecCol: String,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    val gen = s"$path/${liveVersion(spark, path)}"
-    IvfLists.write(encodedLists(delta, idCol, vecCol, storedCent(spark, gen),
-      readModel(spark, gen)), s"$gen/lists", "append", maxRecordsPerFile)
-  }
+      maxRecordsPerFile: Long = 5000000L): Unit =
+    lists.append(spark, path, delta, idCol, vecCol, maxRecordsPerFile)
 
   /** A generation's coarse codebook in the [[Similarity.centFrame]]
     * shape (__cid, __cv, __cn).
@@ -249,42 +231,17 @@ object PqIndex {
     * [[meanQuantizationError]] share.
     */
   private def liveCorpus(spark: SparkSession, gen: String): DataFrame =
-    survivors(spark, gen).select(col("neighbor_id"), col("vec"))
-
-  /** A generation's stored list rows minus its tombstones and the
-    * optional `alsoMasked` ids (a `neighbor_id` column). The mask is
-    * tombstone- plus batch-sized — broadcast.
-    */
-  private def survivors(spark: SparkSession, gen: String,
-      alsoMasked: Option[DataFrame] = None): DataFrame = {
-    val lists = IvfLists.read(spark, s"$gen/lists")
-    (VersionedTree.tombstones(spark, gen)
-        .map(_.select(col("neighbor_id"))) ++
-        alsoMasked.map(_.select(col("neighbor_id").cast("long"))))
-      .reduceOption(_ unionByName _)
-      .fold(lists)(m => lists.join(broadcast(m), Seq("neighbor_id"),
-        "left_anti"))
-  }
+    lists.survivors(spark, gen).select(col("neighbor_id"), col("vec"))
 
   /** One micro-batch of streaming index maintenance — the foreachBatch
-    * body behind [[graft.streaming.StreamingPqMaintenance]], completing
-    * the four-family maintenance story (graph, IVF, token, IVF-PQ).
-    * The batch carries an `opCol` of 'add' / 'delete' rows, classified
-    * by one aggregate: adds are encoded + routed ONCE under the FROZEN
+    * body behind [[graft.streaming.StreamingPqMaintenance]], and
+    * [[IvfIndex.applyMaintenanceBatch]]'s lifecycle without its
+    * `strictLiveCheck`: adds are encoded and routed under the FROZEN
     * stored codebooks (model and centroids read once per call) and
-    * appended behind the touched-cell replay guard of
-    * [[IvfIndex.applyMaintenanceBatch]] (a redelivered batch appends
-    * exactly the missing rows); deletes tombstone through [[delete]]
-    * (already replay-safe).
-    *
-    * A SAME-id delete+add is an UPDATE, and an update batch commits ONE
-    * new generation from one partitioned write: the stored rows minus
-    * (pending tombstones ∪ the batch's deletes), plus the adds guarded
-    * against those survivors, with centroids and model CLONED as in
-    * [[compact]]. The generation is never empty — an update always
-    * keeps its add. `retain` passes through, and the previous
-    * generation is left untouched, so a rollback restores exactly the
-    * pre-batch probes. Single-writer, as everywhere.
+    * appended behind the touched-cell replay guard; deletes tombstone as
+    * [[delete]] does; a same-id delete+add is an UPDATE that commits one
+    * generation from one partitioned write, centroids and model CLONED
+    * as in [[compact]].
     */
   def applyMaintenanceBatch(
       spark: SparkSession,
@@ -294,107 +251,30 @@ object PqIndex {
       vecCol: String,
       opCol: String,
       maxRecordsPerFile: Long = 5000000L,
-      retain: Int = 1): Unit = {
-    val shape = IvfLists.classify(batch, idCol, vecCol, opCol)
-    val counts = new IvfLists.GuardCounts(shape.adds)
-    val live = liveVersion(spark, path)
-    val gen = s"$path/$live"
-    // Adds encoded with the stored codebooks, in the stored column
-    // types, behind the replay guard over `stored`.
-    def fresh(stored: DataFrame): DataFrame = {
-      val adds = IvfLists.adds(batch, idCol, vecCol, opCol)
-        .select(col(idCol),
-          col(vecCol).cast(stored.schema("vec").dataType).as(vecCol))
-      IvfLists.guard(encodedLists(adds, idCol, vecCol,
-          storedCent(spark, gen), readModel(spark, gen)),
-        stored, wholeTree = false, counts)
-    }
-    if (shape.update) {
-      val kept = survivors(spark, gen,
-        Some(IvfLists.deletes(batch, idCol, opCol)))
-      commitLists(spark, path, live, kept.unionByName(fresh(kept)),
-        maxRecordsPerFile, retain)
-    } else {
-      if (shape.deletes)
-        delete(spark, path, IvfLists.deletes(batch, idCol, opCol),
-          "neighbor_id")
-      if (shape.adds > 0) IvfLists.write(
-        fresh(IvfLists.read(spark, s"$gen/lists")), s"$gen/lists",
-        "append", maxRecordsPerFile)
-    }
-    counts.log("PqIndex")
-  }
+      retain: Int = 1): Unit =
+    lists.applyBatch(spark, path, batch, idCol, vecCol, opCol,
+      maxRecordsPerFile, wholeTree = false, retain)
 
-  /** Tombstone a batch of stored ids (see the object doc). Replay-safe:
+  /** Tombstone a batch of stored ids (see the object doc). Replay-safe,
+    * the rule of all four index families ([[VersionedTree.tombstone]]):
     * only currently-stored, not-yet-tombstoned ids land, so a
     * redelivered delete (or a delete of a never-stored id) appends
-    * nothing. The presence check is one slim neighbor_id-column scan
-    * with the batch side broadcast — batch-bounded, never a shuffle of
-    * the index.
+    * nothing.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String): Unit = {
-    val gen = s"$path/${liveVersion(spark, path)}"
-    val batch = ids.select(col(idCol).cast("long").as("neighbor_id"))
-      .distinct()
-    val pending = VersionedTree.tombstones(spark, gen).fold(batch)(t =>
-      batch.join(broadcast(t.select(col("neighbor_id"))), Seq("neighbor_id"),
-        "left_anti"))
-    val present = IvfLists.read(spark, s"$gen/lists")
-      .select(col("neighbor_id"))
-      .join(broadcast(pending), Seq("neighbor_id"), "left_semi")
-      .distinct()
-      .localCheckpoint(eager = true)
-    if (!present.isEmpty)
-      present.coalesce(1).write.mode("append").parquet(s"$gen/tombstones")
-    Checkpoints.release(present)
-  }
+      idCol: String): Unit =
+    lists.delete(spark, path, ids, idCol)
 
-  /** Fold pending tombstones into a rewritten committed generation:
-    * survivor lists are rewritten (one writer per cell, like [[write]]),
-    * while the centroids and the PQ model are CLONED from the live
-    * generation — deletes must not move surviving codes (see the object
-    * doc). No-op when nothing is tombstoned.
+  /** [[IvfIndex.compact]], with the PQ model CLONED beside the
+    * centroids (deletes must not move surviving codes): it always
+    * rewrites the survivors one writer per cell, merging appended small
+    * files, then deletes the folded generation's mask, so delete →
+    * compact(retain = 2) → [[rollback]] resurrects the deleted ids. An
+    * all-tombstoned index keeps its mask.
     */
   def compact(spark: SparkSession, path: String,
-      maxRecordsPerFile: Long = 5000000L, retain: Int = 1): Unit = {
-    val live = liveVersion(spark, path)
-    if (VersionedTree.tombstones(spark, s"$path/$live").isEmpty) return
-    val kept = survivors(spark, s"$path/$live")
-    // An ALL-TOMBSTONED index keeps its mask: committing a generation
-    // whose lists dir holds zero rows would land `_GRAFT_COMMIT` over a
-    // parquet tree with no data files, and every later [[topK]] read of
-    // the resolved generation dies on schema inference
-    // (UNABLE_TO_INFER_SCHEMA). The mask already hides everything, so
-    // skipping the rewrite is probe-identical ([[IvfIndex.compact]] /
-    // MaxSimIndex.readToks stance).
-    if (kept.isEmpty) {
-      System.err.println(s"[graft] PqIndex.compact: every stored row " +
-        s"under $path is tombstoned — keeping the mask instead of " +
-        "committing an empty generation. This mask can never be folded " +
-        "(every compact would re-hit this case): repopulate with a " +
-        "rebuild (write), which clears it")
-      return
-    }
-    commitLists(spark, path, live, kept, maxRecordsPerFile, retain)
-  }
-
-  /** Commit `rows` (the stored list layout) as the next generation's
-    * lists, with the live generation's centroids and PQ model CLONED —
-    * deletes and updates must not move surviving codes. The one rewrite
-    * [[compact]] and an update batch share.
-    */
-  private def commitLists(spark: SparkSession, path: String, live: String,
-      rows: DataFrame, maxRecordsPerFile: Long, retain: Int): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    versions.commitNext(spark, path, retain) { gen =>
-      IvfLists.write(rows, s"$gen/lists", "overwrite", maxRecordsPerFile)
-      Seq("centroids", "model").foreach(t =>
-        TreeClone.linkOrCopy(
-          new org.apache.hadoop.fs.Path(s"$path/$live/$t"),
-          new org.apache.hadoop.fs.Path(s"$gen/$t"), conf))
-    }: Unit
-  }
+      maxRecordsPerFile: Long = 5000000L, retain: Int = 1): Unit =
+    lists.compact(spark, path, maxRecordsPerFile, retain)
 
   /** Probe the stored index — result-identical to
     * [[Similarity.ivfPqTopK]] over the same corpus/centroids/model
@@ -410,8 +290,6 @@ object PqIndex {
     val model = readModel(spark, s"$path/$live")
     val cent = storedCent(spark, s"$path/$live")
     val stored = IvfLists.read(spark, s"$path/$live/lists")
-    val tomb = VersionedTree.tombstones(spark, s"$path/$live")
-      .map(_.select(col("neighbor_id")))
     // The pq_code column RIDES the routed candidate join (extra columns
     // on the lists frame survive ivfCandidates): the ADC stage scores
     // codes read off this same partition-pruned scan instead of
@@ -431,12 +309,8 @@ object PqIndex {
     // scan untouched preserves its dynamic partition pruning (the
     // plan-shape contract PqIndexSpec pins). The rerank below only sees
     // ADC survivors, so the mask here covers it too.
-    val coded = tomb match {
-      case None => codedRaw
-      case Some(t) =>
-        codedRaw.join(broadcast(t.distinct()), Seq("neighbor_id"),
-          "left_anti")
-    }
+    val coded = VersionedTree.masked(spark, s"$path/$live", codedRaw,
+      "neighbor_id")
     val adc = Pq.adcTopKOnCoded(probes, coded, idCol, vecCol, model,
       candidateK)
     // Exact rerank reads the vec column ONLY from the probed cells: the

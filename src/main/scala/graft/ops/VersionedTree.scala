@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Recursive tree clone for index-generation BRANCHING: hard-links
   * files when source and destination live on the local filesystem and
@@ -67,8 +68,8 @@ private[ops] object TreeClone {
   * (`pq_v{n}`: centroids + lists + model), [[GraphIndex]]
   * (`graph_v{n}`: nodes + edges) and [[MaxSimIndex]] (`tokens_v{n}`:
   * token tree + meta). Each family's pending deletes live in its
-  * generation's `tombstones/` tree, read through
-  * [[VersionedTree.tombstones]].
+  * generation's `tombstones/` tree, written by [[VersionedTree.tombstone]]
+  * and masked out by [[VersionedTree.masked]].
   *
   * Single-writer assumption, like every maintenance op here.
   */
@@ -201,15 +202,47 @@ private[ops] final class VersionedTree(prefix: String) {
 private[ops] object VersionedTree {
 
   /** Generation `gen`'s pending tombstones (the `gen/tombstones` tree
-    * every family's delete appends to), None when no delete landed
-    * there. Read with the footer-pinned schema ([[IvfLists.read]]), so
-    * no schema-inference job; tiny by the compaction-bounded assumption,
-    * so consumers broadcast it. Callers select their own id column.
+    * [[tombstone]] appends to), None when no delete landed there. Read
+    * with the footer-pinned schema ([[IvfLists.read]]), so no
+    * schema-inference job; tiny by the compaction-bounded assumption.
+    * The tree holds one id column.
     */
   def tombstones(spark: SparkSession, gen: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$gen/tombstones")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       Some(IvfLists.read(spark, p.toString))
     else None
+  }
+
+  /** `frame` minus generation `gen`'s tombstones and the optional `also`
+    * ids, broadcast-anti-joined on column `key`, in `frame`'s column
+    * order — the one mask of all four families. Both masks are one id
+    * column, renamed to `key`, so a graph masks `nbr` as well as `id`.
+    */
+  def masked(spark: SparkSession, gen: String, frame: DataFrame,
+      key: String, also: Option[DataFrame] = None): DataFrame =
+    (tombstones(spark, gen) ++ also).map(_.toDF(key))
+      .reduceOption(_ unionByName _)
+      .fold(frame)(m => frame.join(broadcast(m), Seq(key), "left_anti")
+        .select(frame.columns.toSeq.map(col): _*))
+
+  /** Append the ids in `ids`' `idCol` to generation `gen`'s tombstones,
+    * as the one long column `key` — the one tombstone writer of the four
+    * families. Replay-safe: only ids present in `stored`'s `key` column
+    * and not yet tombstoned land, so a redelivered delete, or a delete
+    * of a never-stored id, appends nothing. The presence check is one
+    * slim `key` scan with the batch broadcast, checkpointed once, and
+    * the append runs only when something is left.
+    */
+  def tombstone(spark: SparkSession, gen: String, ids: DataFrame,
+      idCol: String, stored: DataFrame, key: String): Unit = {
+    val batch = masked(spark, gen,
+      ids.select(col(idCol).cast("long").as(key)).distinct(), key)
+    Checkpoints.eagerNonEmpty(stored.select(col(key))
+        .join(broadcast(batch), Seq(key), "left_semi").distinct())
+      .foreach { present =>
+        present.coalesce(1).write.mode("append").parquet(s"$gen/tombstones")
+        Checkpoints.release(present)
+      }
   }
 }

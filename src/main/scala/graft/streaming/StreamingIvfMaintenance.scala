@@ -15,11 +15,11 @@ import graft.ops.IvfIndex
   * [[IvfIndex.applyMaintenanceBatch]]: adds are codebook-assigned and
   * appended only under the `list=` partitions the batch touches, deletes
   * tombstone. The batch application is IDEMPOTENT (adds anti-joined
-  * against the already-stored ids of the touched lists, deletes are
-  * anti-join semantics), so Structured Streaming's at-least-once
-  * `foreachBatch` replay after a crash converges to the same index a
-  * single delivery would have produced — the same replay stance as
-  * [[StreamingGold]], achieved per-row instead of via a batch-id log
+  * against the already-stored ids of the touched lists, deletes land
+  * only stored, not-yet-tombstoned ids), so Structured Streaming's
+  * at-least-once `foreachBatch` replay after a crash converges to the
+  * same index a single delivery would have produced — the replay stance
+  * of [[StreamingGold]], achieved per-row instead of via a batch-id log
   * because an IVF append has no atomic snapshot swap to hang a marker
   * on.
   *
@@ -33,8 +33,9 @@ import graft.ops.IvfIndex
   * rebuild fallback), leaving one file per touched list and no
   * tombstones; appends of update-free batches accumulate small files
   * per touched list, so run compact on the usual maintenance cadence —
-  * it is safe to do so between micro-batches (versioned `_SUCCESS`
-  * commit, readers and the next batch resolve the new tree).
+  * it is safe to do so between micro-batches (each compact commits the
+  * next `ivf_v{n}` generation behind its `_GRAFT_COMMIT` marker, and
+  * readers and the next batch resolve the new generation).
   */
 object StreamingIvfMaintenance {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.ops.MaxSimIndex
+import graft.ops.{IvfLists, MaxSimIndex}
 
 /** Continuous token-index maintenance: a `foreachBatch` sink that keeps
   * a persisted [[graft.ops.MaxSimIndex]] fresh under streaming document
@@ -51,19 +51,19 @@ object StreamingMaxSimMaintenance {
       val adds = opCol match {
         case None => batch
         case Some(oc) =>
-          val dels = batch.filter(col(oc) === "delete").select(col(idCol))
-          val addRows = batch.filter(col(oc) === "add")
-          MaxSimIndex.delete(s, path, dels, idCol)
-          // Same-id delete+add = update: fold the fresh masks inside the
-          // batch so the re-added rows land live (batch-sized semi-join).
-          if (!addRows.select(col(idCol))
-              .join(dels, Seq(idCol), "left_semi").isEmpty) {
+          // One aggregate says whether the batch deletes and whether a
+          // same-id delete+add (an update) needs its masks folded inside
+          // the batch, so the re-added rows land live.
+          val shape = IvfLists.classify(batch, idCol, vecCol, oc)
+          if (shape.deletes) MaxSimIndex.delete(s, path,
+            batch.filter(col(oc) === "delete").select(col(idCol)), idCol)
+          if (shape.update) {
             System.err.println("[graft] StreamingMaxSimMaintenance: " +
               "same-id delete+add (update) — compacting before the " +
               "append (one token-tree rewrite, the pure-mask price)")
             MaxSimIndex.compact(s, path, retain)
           }
-          addRows
+          batch.filter(col(oc) === "add")
       }
       MaxSimIndex.append(s, path, adds, idCol, posCol, vecCol)
     }

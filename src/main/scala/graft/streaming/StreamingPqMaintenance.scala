@@ -17,7 +17,8 @@ import graft.ops.PqIndex
   * 'add' or 'delete'. Each micro-batch applies through
   * [[PqIndex.applyMaintenanceBatch]]: adds are stored-model encoded,
   * stored-centroid routed, and appended behind a touched-cell replay
-  * guard; deletes tombstone (replay-safe); a SAME-batch delete+add is
+  * guard; deletes tombstone only stored, not-yet-tombstoned ids
+  * (replay-safe); a SAME-batch delete+add is
   * an UPDATE, and an update batch commits ONE new generation from one
   * partitioned write (survivors minus the batch's deletes, plus its
   * guarded adds, codebooks and model cloned) — no compact-then-append
@@ -31,8 +32,11 @@ import graft.ops.PqIndex
   * correctness) — schedule refit + [[PqIndex.write]] rebuilds on the
   * usual cadence, exactly like production FAISS deployments retrain
   * their quantizers. The index must exist before the stream starts;
-  * cross-batch deletes stay terminal until a compact; `retain` passes
-  * through so a retention discipline survives maintenance.
+  * cross-batch deletes stay terminal until a compact, which always
+  * rewrites (folding masks and merging appended small files) and is
+  * safe between micro-batches; `retain` passes through so a retention
+  * discipline survives maintenance. These are [[StreamingIvfMaintenance]]'s
+  * rules: both indexes run one maintenance lifecycle.
   */
 object StreamingPqMaintenance {
 

@@ -172,9 +172,16 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       m2.models.map(_.scale).toSeq == model.models.map(_.scale).toSeq)
     assert(spark.read.parquet(s"$path/$v2/lists")
       .filter(pmod(col("neighbor_id"), lit(4)) === 1).count() == 0)
-    // Compact with nothing pending: a no-op, no new generation.
+    // Compact with nothing pending still rewrites: a new generation,
+    // probes unchanged, one data file per list.
     PqIndex.compact(spark, path)
-    assert(PqIndex.liveVersion(spark, path) == v2)
+    val v3 = PqIndex.liveVersion(spark, path)
+    assert(v3 != v2)
+    assert(got() == want)
+    val files = new java.io.File(s"$path/$v3/lists").listFiles()
+      .filter(_.getName.startsWith("list="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
+    assert(files.nonEmpty && files.forall(_ == 1), files)
   }
 
   test("branch: a hard-linked snapshot mutates independently of the " +
