@@ -1,38 +1,48 @@
 package graft.gold
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bucketed storage for co-located joins and shuffle-free aggregation
-  * (SURVEY.md §4): writing a table bucketed by its join/group key means
-  * every downstream `groupBy(key)` or join with an identically-bucketed
-  * table reads data ALREADY hash-distributed — Catalyst drops the
-  * Exchange entirely. At 100 TB this converts the silver→gold joins from
+/** Bucketed (pre-shuffled) storage for co-located joins and shuffle-free
+  * aggregation (SURVEY.md §4): writing a table bucketed by its join/group
+  * key means every downstream `groupBy(key)` or equi-join with an
+  * identically-bucketed table reads data ALREADY hash-distributed —
+  * Catalyst drops the Exchange entirely (and the sort, when the bucket
+  * sort matches). At 100 TB this converts the silver→gold joins from
   * full-table shuffles into per-bucket local work; the shuffle is paid
   * ONCE, at write time, instead of per query.
   *
-  * Plain parquet directories cannot carry bucket metadata, so bucketed
-  * tables go through the session catalog (`saveAsTable`). Both sides of a
-  * co-located join must agree on bucket column and count.
+  * What Spark requires for the exchange to disappear, encoded here so
+  * callers can't half-configure it:
+  *   - both sides bucketed on the JOIN KEY with compatible bucket
+  *     counts (equal, or one a multiple of the other);
+  *   - `spark.sql.sources.bucketing.enabled` (default true) and the
+  *     table read through the catalog (`spark.table`), not raw parquet
+  *     paths — plain parquet directories cannot carry bucket metadata;
+  *   - one FILE per bucket (enforced by repartitioning on the key
+  *     before the write) — otherwise Spark may disable bucketed reads
+  *     or scan multiple files per bucket task.
+  *
+  * The plan-shape contract (no shuffle when both sides are bucketed; one
+  * Exchange when only one side is) is asserted in BucketingSpec and
+  * BucketedJoinSpec — the same "the physical plan is part of the
+  * contract" stance as PlanShapeSpec.
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed (optionally sorted-within-bucket) parquet
-    * table in the session catalog, replacing any previous version.
+  /** Write `df` as a catalog table bucketed and sorted on `key`, one file
+    * per bucket, replacing any previous version.
     */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCol: String,
-      numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val w: DataFrameWriter[Row] = df.write
-      .mode("overwrite")
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
+    df.repartition(buckets, df(key))
+      .write.mode("overwrite")
+      .bucketBy(buckets, key)
+      .sortBy(key)
       .format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
-  }
 
+  /** Read a bucketed table through the catalog (bucket metadata only
+    * flows this way — a raw parquet read loses it).
+    */
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /** True when the physical plan contains no SHUFFLE — the assertion that

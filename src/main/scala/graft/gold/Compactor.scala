@@ -10,10 +10,10 @@ import org.apache.spark.sql.SparkSession
   * driver listing + per-file open overhead instead of I/O. Compaction
   * rewrites a fragmented directory into ~`targetFileBytes` files.
   *
-  * The rewrite lands in a NEW directory (blue/green, same discipline as
-  * [[GoldSink]]): plain-parquet directory swaps are not atomic on object
-  * stores, so readers keep the old path until the caller flips their
-  * pointer. Row content is preserved exactly; intra-file order is not
+  * The rewrite lands in a NEW directory: plain-parquet directory swaps
+  * are not atomic on object stores, so readers keep the old path until
+  * the caller flips their pointer (unlike [[GoldSink]], which owns its
+  * pointer and is local-filesystem only). Row content is preserved exactly; intra-file order is not
   * contractual (parquet readers get no ordering guarantee from a
   * directory anyway).
   */

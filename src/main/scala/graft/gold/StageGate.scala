@@ -1,10 +1,12 @@
 package graft.gold
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.time.{Duration, Instant}
 
 import scala.util.control.NonFatal
+
+import graft.ops.LocalFs
 
 /** Per-stage run gating + tolerated-failure policy (SURVEY.md §2.1 S15 /
   * §2.6 T5; reference `src/run_all_etl.py:117-176`): a state file records
@@ -38,44 +40,19 @@ object StageGate {
     readState(statePath).get(stage)
       .forall(last => !now.isBefore(last.plus(minInterval)))
 
-  // Same-JVM serialization in front of the OS file lock: FileChannel
-  // .lock THROWS OverlappingFileLockException (it does not block) for a
-  // second thread of one process, which would convert a SUCCEEDED stage
-  // into Failed — or abort the pipeline — on a pure bookkeeping race
-  // when two gated stages finish on parallel driver threads. One
-  // monitor per state path (the BlueGreenStore pattern).
-  private val stateMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Record a successful run, preserving other stages' entries
-    * (`:160-175`). The read-modify-write runs under a per-path JVM
-    * monitor (two threads of one process) plus an OS file lock (two
-    * processes) so concurrently finishing stages cannot drop each
-    * other's entries; the temp-file + atomic rename additionally
-    * prevents readers from ever seeing a torn file.
+    * (`:160-175`). The read-modify-write runs under the write lock
+    * `<state>.lock` ([[LocalFs.withWriteLock]]: threads of one process
+    * and other processes alike), so concurrently finishing stages cannot
+    * drop each other's entries; the atomic replace additionally prevents
+    * readers from ever seeing a torn file.
     */
-  def recordSuccess(statePath: Path, stage: String, now: Instant): Unit = {
-    Option(statePath.getParent).foreach(Files.createDirectories(_))
-    val monitor = stateMonitors.computeIfAbsent(
-      statePath.toAbsolutePath.normalize.toString, _ => new Object)
-    monitor.synchronized {
-    val lockPath = statePath.resolveSibling(statePath.getFileName.toString + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lock = ch.lock()
-      try {
-        val next = readState(statePath) + (stage -> now)
-        val body = next.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k\t$v" }.mkString("\n")
-        val tmp = statePath.resolveSibling(statePath.getFileName.toString + ".tmp")
-        Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, statePath, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      } finally lock.release()
-    } finally ch.close()
+  def recordSuccess(statePath: Path, stage: String, now: Instant): Unit =
+    LocalFs.withWriteLock(statePath.resolveSibling(statePath.getFileName.toString + ".lock")) {
+      val next = readState(statePath) + (stage -> now)
+      LocalFs.replaceAtomically(statePath,
+        next.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }.mkString("\n"))
     }
-  }
 
   /** Outcome of a gated stage attempt. */
   sealed trait Outcome[+T]

@@ -121,17 +121,11 @@ object ItemMappingDim {
     // embedded '\n' would split an entry across lines and make the whole
     // cache unparsable — readCache's NonFatal guard then silently
     // refetches every run AND the StalePartial network-failure fallback
-    // is lost. Temp + atomic rename (the StageGate discipline) keeps a
-    // concurrent reader off torn files.
+    // is lost. The atomic replace keeps a concurrent reader off torn files.
     def clean(s: String) = s.map(c => if (c == '\t' || c == '\n' || c == '\r') ' ' else c)
     val body = now.toEpochMilli.toString +: m.values.toSeq.sortBy(_.id)
       .map(i => s"${clean(i.id)}\t${clean(i.name)}")
-    Option(path.getParent).foreach(Files.createDirectories(_))
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, body.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.ops.LocalFs.replaceAtomically(path, body.mkString("\n"))
   }
 }
 

@@ -101,13 +101,9 @@ object EmbedUpsertSink {
     val body = state.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${esc(k)}": $v""" }
       .mkString("{\n", ",\n", "\n}")
-    // Temp-file + atomic rename (the StageGate.recordSuccess discipline):
-    // a torn write here would reset the state on the next run and repost
-    // every embed instead of editing in place.
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // Atomic replace: a torn write here would reset the state on the next
+    // run and repost every embed instead of editing in place.
+    graft.ops.LocalFs.replaceAtomically(path, body)
   }
 
   private final case class Line(

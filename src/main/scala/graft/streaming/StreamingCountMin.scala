@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.gold.GoldSink
 import graft.text.CountMin
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -13,10 +14,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * ([[CountMin.build]] — map-side combined, ≤ d·w rows), summed into the
   * stored table (CMS merge IS addition). Unlike the HLL store's
   * max-merge, SUM is NOT idempotent — exactly-once rests entirely on the
-  * [[BlueGreenStore]] batch-id log: a replayed micro-batch (same id)
-  * returns before touching state, and the data+marker swap is atomic, so
-  * a crash can never double-count. Out-of-band double application under
-  * a fresh id WILL double-count — by design: that is what "add this
+  * batch-id log of its [[GoldSink]] store (one table, `data`): a
+  * replayed micro-batch (same id) returns before touching state, and the
+  * data+marker swap is atomic, so a crash can never double-count.
+  * Out-of-band double application under a fresh id WILL double-count — by design: that is what "add this
   * batch" means for a counter (the spec pins both behaviours).
   *
   * The accumulated table is BIT-IDENTICAL to one batch [[CountMin.build]]
@@ -30,7 +31,7 @@ class StreamingCountMin(
     d: Int = 4,
     w: Int = 1024) {
 
-  private val store = new BlueGreenStore(rootDir)
+  private val store = new GoldSink(rootDir)
 
   def committedBatchId: Long = store.committedBatchId
 
@@ -43,14 +44,14 @@ class StreamingCountMin(
     store.withWriteLock {
       if (batchId > committedBatchId) {
         val delta = CountMin.build(batch, itemCol, d, w)
-        val merged = store.read(batch.sparkSession)
+        val merged = sketch(batch.sparkSession)
           .map(CountMin.merge(_, delta)).getOrElse(delta)
-        store.commit(merged, batchId)
+        store.publish(Map("data" -> merged), Some(batchId))
       }
     }
 
   /** The live (depth, bucket, cnt) sketch table. */
-  def sketch(spark: SparkSession): Option[DataFrame] = store.read(spark)
+  def sketch(spark: SparkSession): Option[DataFrame] = store.read(spark, "data")
 
   /** Frequency upper bounds for `probes(probeCol)` over ALL history. */
   def estimates(spark: SparkSession, probes: DataFrame,

@@ -29,9 +29,10 @@ import graft.text.TextFunctions
   * (flatMapGroupsWithState downstream of dropDuplicates) never apply.
   *
   * Exactly-once discipline (the part a restart must not break):
-  *   - the kept-corpus store is a [[StreamingGold]] blue/green table with
-  *     its `_committed_batch` marker swapped atomically WITH the data —
-  *     a replayed batchId ≤ committed returns without touching anything;
+  *   - the kept-corpus store is a [[StreamingGold]] table, published
+  *     through the blue/green [[graft.gold.GoldSink]] with its
+  *     `_committed_batch` marker inside the swapped slot — a replayed
+  *     batchId ≤ committed returns without touching anything;
   *   - the sink is invoked BEFORE the corpus commit. A crash between
   *     sink and commit replays the batch against the UNCHANGED corpus,
   *     recomputing byte-identical output for the same batchId — so the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.gold.GoldSink
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -24,11 +25,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *      a partial-agg'd groupBy, so even a double-applied batch (e.g.
   *      manual backfill) converges to the same table.
   *
-  * Blue/green layout exactly like [[graft.gold.GoldSink]]: readers always
-  * see a complete snapshot; the pointer swap is the commit point. On a
-  * table format with ACID merge (Delta/Iceberg) steps collapse into
-  * `MERGE INTO` + the format's own idempotent-write txn id — this class
-  * is that contract on bare directories.
+  * The store is a [[graft.gold.GoldSink]] holding one table, `data`:
+  * readers always see a complete snapshot; the pointer swap is the commit
+  * point. On a table format with ACID merge (Delta/Iceberg) steps
+  * collapse into `MERGE INTO` + the format's own idempotent-write txn
+  * id — this class is that contract on bare directories.
   *
   * Scale: the merge shuffles (key, version) — one key-partitioned
   * aggregation over current ∪ increment. Gold keyed tables are orders of
@@ -43,13 +44,13 @@ class StreamingGold(
 
   require(keys.nonEmpty, "merge needs at least one key column")
 
-  private val store = new BlueGreenStore(rootDir)
+  private val store = new GoldSink(rootDir)
 
   /** Batch id recorded in the LIVE snapshot; -1 before the first commit. */
   def committedBatchId: Long = store.committedBatchId
 
   /** The live merged table, if any batch has committed. */
-  def read(spark: SparkSession): Option[DataFrame] = store.read(spark)
+  def read(spark: SparkSession): Option[DataFrame] = store.read(spark, "data")
 
   /** Run `f` under the store's write lock — for COMPOSITE operations
     * (replay check + reads + stages + [[mergeBatch]]) that must
@@ -88,7 +89,7 @@ class StreamingGold(
           case Some(current) => merge(current.unionByName(batch))
           case None => merge(batch)
         }
-        store.commit(merged, batchId)
+        store.publish(Map("data" -> merged), Some(batchId))
       }
     }
 

@@ -56,12 +56,12 @@ class StreamingOsrsGold(
     * from the full accumulated history. Public for manual backfill — the
     * store merge makes double application converge.
     *
-    * The WHOLE sequence runs under the raw store's write lock (reentrant
-    * with mergeBatch's own): an unserialized backfill beside a live
-    * trigger could interleave two publishes into the SAME standby gold
-    * slot (torn report set goes live), or finish a rebuild of OLDER
-    * state last and overwrite the newer published gold until the next
-    * trigger.
+    * [[GoldSink.publish]] locks the gold store itself, so two publishes
+    * never tear one standby slot. The WHOLE sequence still runs under the
+    * raw store's write lock (reentrant with mergeBatch's own) to order
+    * batches: an unserialized backfill beside a live trigger could finish
+    * a rebuild of OLDER state last and overwrite the newer published gold
+    * until the next trigger.
     *
     * The rebuild materializes its silver caches once
     * ([[OsrsPipeline.silver]]), then publishes every table concurrently,
@@ -83,8 +83,7 @@ class StreamingOsrsGold(
 
   /** The live published report table, once any batch has committed. */
   def readTable(spark: org.apache.spark.sql.SparkSession,
-      name: String): Option[DataFrame] =
-    sink.liveDir.map(d => spark.read.parquet(s"$d/$name"))
+      name: String): Option[DataFrame] = sink.read(spark, name)
 
   /** One streaming query over a raw (id, timestamp, raw_content) stream. */
   def writer(

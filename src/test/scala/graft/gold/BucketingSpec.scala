@@ -13,7 +13,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     val users = (0L until 50L).map(i => (i, s"user_$i")).toDF("user_id", "name")
 
     try {
-      Bucketing.writeBucketed(events, "b_events", "user_id", 8, Seq("user_id"))
+      Bucketing.writeBucketed(events, "b_events", "user_id", 8)
       Bucketing.writeBucketed(users, "b_users", "user_id", 8)
 
       val be = Bucketing.read(spark, "b_events")

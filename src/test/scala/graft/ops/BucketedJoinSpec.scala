@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.gold.Bucketing
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

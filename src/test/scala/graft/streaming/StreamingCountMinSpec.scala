@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkTestBase
+import graft.gold.GoldSink
 import graft.text.CountMin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -71,20 +72,20 @@ class StreamingCountMinSpec extends AnyFunSuite with SparkTestBase {
     // concurrent-backfill scenario hits; with it, the final state is
     // exactly 20 and the batch log advanced once per commit.
     val root = Files.createTempDirectory("graft_bg_race").toString
-    val store = new BlueGreenStore(root)
+    val store = new GoldSink(root)
     import org.apache.spark.sql.functions.sum
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map(_ => new Thread(() =>
       (0 until 5).foreach { _ =>
         try store.withWriteLock {
-          val cur = store.read(spark)
+          val cur = store.read(spark, "data")
             .map(_.agg(sum("n")).head.getLong(0)).getOrElse(0L)
-          store.commit(Seq(cur + 1L).toDF("n"), store.committedBatchId + 1)
+          store.publish(Map("data" -> Seq(cur + 1L).toDF("n")), Some(store.committedBatchId + 1))
         } catch { case t: Throwable => errs.add(t) }
       }))
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errs.isEmpty, s"writer threw: ${errs.peek()}")
-    val got = store.read(spark).get.agg(sum("n")).head.getLong(0)
+    val got = store.read(spark, "data").get.agg(sum("n")).head.getLong(0)
     assert(got == 20L, s"lost ${20 - got} updates")
     // Ids started at committedBatchId(-1) + 1 = 0, so 20 commits land the
     // log at 19 — one advance per commit, none skipped or repeated.
@@ -95,10 +96,10 @@ class StreamingCountMinSpec extends AnyFunSuite with SparkTestBase {
       "(backfill loop wrapping mergeBatch) without " +
       "OverlappingFileLockException") {
     val root = Files.createTempDirectory("graft_bg_reent").toString
-    val store = new BlueGreenStore(root)
+    val store = new GoldSink(root)
     val got = store.withWriteLock {
       store.withWriteLock { // same thread, same store: must just run
-        store.commit(Seq(1L).toDF("n"), 0L)
+        store.publish(Map("data" -> Seq(1L).toDF("n")), Some(0L))
         41 + 1
       }
     }
@@ -106,11 +107,11 @@ class StreamingCountMinSpec extends AnyFunSuite with SparkTestBase {
     // ...and the lock still excludes OTHER threads after release.
     import org.apache.spark.sql.functions.sum
     val t = new Thread(() => store.withWriteLock {
-      val cur = store.read(spark).map(_.agg(sum("n")).head.getLong(0)).get
-      store.commit(Seq(cur + 1L).toDF("n"), 1L)
+      val cur = store.read(spark, "data").map(_.agg(sum("n")).head.getLong(0)).get
+      store.publish(Map("data" -> Seq(cur + 1L).toDF("n")), Some(1L))
     })
     t.start(); t.join()
-    assert(store.read(spark).get.agg(sum("n")).head.getLong(0) == 2L)
+    assert(store.read(spark, "data").get.agg(sum("n")).head.getLong(0) == 2L)
   }
 
   test("state stays bounded at d*w cells regardless of volume") {

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Pre-commit guard: never commit a snapshot that doesn't compile.
-# Usage: tools/precommit.sh [--full | --oracle q_a,q_b | --index]
+# Usage: tools/precommit.sh [--full | --oracle q_a,q_b | --index | --stores]
 #   default:  sbt compile Test/compile   (~seconds, catches round-2's failure mode)
 #   --full:   also runs the ScalaTest suite
 #   --oracle: runs graft.Verify for the listed queries only, then compares
@@ -10,6 +10,11 @@
 #   --index:  the index lifecycle check: the specs of the four persisted
 #             index families (IVF, IVF-PQ, graph, token) and their
 #             streaming sinks, then the 26 index oracle rows as --oracle.
+#   --stores: the specs of every store that commits through the blue/green
+#             GoldSink or the shared LocalFs lock and atomic replace (gold
+#             sets, keyed streaming stores, stage state, embed state, the
+#             item-mapping cache), plus both bucketed-table specs. No
+#             oracle row reaches these stores.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -30,6 +35,13 @@ q_maxsim_index,q_maxsim_delete,\
 q_ann_graph_topk,q_ann_graph_persist,q_ann_graph_delete,q_ann_graph_compact,\
 q_ann_graph_rollback,q_ann_filtered_graph,q_ann_filtered_broad"
 
+STORE_SPECS="graft.gold.GoldSink* graft.gold.StageGate* \
+graft.streaming.StreamingGoldSpec graft.streaming.StreamingCountMinSpec \
+graft.streaming.StreamingDistinctSpec graft.streaming.StreamingCurationSpec \
+graft.streaming.StreamingOsrsGoldSpec graft.streaming.EmbedUpsertSinkSpec \
+graft.sources.ItemMappingDimSpec graft.OsrsPipelineSpec \
+graft.gold.BucketingSpec graft.ops.BucketedJoinSpec"
+
 oracle() {
   local sf="${SPARK_GRAFT_SF_DIR:-$(pwd)/../testdata/sf0.01}"
   local out="target/verify_oracle"
@@ -46,6 +58,8 @@ elif [[ "${1:-}" == "--oracle" ]]; then
 elif [[ "${1:-}" == "--index" ]]; then
   sbt -batch "testOnly $INDEX_SPECS"
   oracle "$INDEX_ROWS"
+elif [[ "${1:-}" == "--stores" ]]; then
+  sbt -batch "testOnly $STORE_SPECS"
 else
   sbt -batch compile Test/compile
 fi
